@@ -1,7 +1,7 @@
 package graft.app
 
-import graft.assign.{LinkMembership, ProblemJoins, RelevanceFilter, TileAssigner}
-import graft.output.AreaWriters
+import graft.assign.TileAssigner
+import graft.output.{AreaWriters, MetricsLog}
 import graft.pipeline.{SplitConfig, SplitPipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -155,64 +155,90 @@ object SplitterArgs {
 }
 
 /**
- * Phase driver mirroring the reference `Main` (split ->
- * gen-problem-list -> handle-problem-list -> dist), each phase gated
- * by `--stop-after` and checkpointed to `output-dir` so a rerun
- * resumes from artifacts (split-file reuse semantics).
+ * The one phase driver, mirroring the reference `Main` (split ->
+ * gen-problem-list -> handle-problem-list -> dist,
+ * `Main.java:120-133`): each phase gated by `--stop-after` and
+ * checkpointed to `output-dir` so a rerun resumes from artifacts
+ * (split-file reuse semantics). What differs between corpus and OSM
+ * inputs lives behind [[PhaseInput]]; every `metrics.jsonl` line goes
+ * through one [[MetricsLog]].
  */
 object Main {
 
-  /** Links derive arithmetically from doc ids — the corpus's link
-    * model ([[graft.model.LinkModel]]), shared with the catalog. */
-  private def linksOf(points: DataFrame): DataFrame =
-    points.select(graft.model.LinkModel.linkIdCol().as("link_id")).distinct()
-      .select(col("link_id"),
-        graft.model.LinkModel.memberIdsCol(col("link_id")).as("member_ids"))
-
-  /** Solved areas as a t_-prefixed broadcast dimension. */
-  private def tilesDimOf(spark: SparkSession,
-                         areas: Seq[graft.output.AreaDef]): DataFrame =
-    spark.createDataFrame(areas.map(ad =>
-      (ad.mapId.toLong, ad.rect.minLat.toLong, ad.rect.minLon.toLong,
-        ad.rect.maxLat.toLong, ad.rect.maxLon.toLong)))
-      .toDF("map_id", "t_min_lat", "t_min_lon", "t_max_lat", "t_max_lon")
-
   /** Run all phases up to `stopAfter`; returns the last phase run.
-    * Inputs that are OSM files (`.osm[.gz]` / `.o5m` / `.pbf`) run the
-    * OSM-entity pipeline ([[OsmSplit]]); parquet paths run the corpus
-    * pipeline below. */
+    * Inputs that are all OSM files (`.osm[.gz]` / `.o5m` / `.pbf`) run
+    * through [[OsmInput]], parquet paths through [[CorpusInput]]. */
   def run(spark: SparkSession, a: SplitterArgs): String = {
     require(a.inputs.nonEmpty, "at least one input path is required")
-    if (a.inputs.forall(OsmSplit.isOsmInput)) return OsmSplit.run(spark, a)
+    val input = a.inputs.partition(OsmSplit.isOsmInput) match {
+      case (_, Nil) => new OsmInput(spark, a)
+      case (Nil, _) => new CorpusInput(spark, a)
+      case (osm, other) => throw new IllegalArgumentException(
+        s"Mixed OSM and parquet inputs are not supported: ${osm.mkString(", ")} " +
+          s"and ${other.mkString(", ")}")
+    }
     val cfg = a.toConfig
     val outDir = a.outputDir
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    // metrics reflect THIS run's artifacts: truncate, never accumulate
-    // stale phase lines from earlier runs into the same output dir
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$outDir/metrics.jsonl"))
-    val raw = a.inputs.map(spark.read.parquet(_)).reduce(_ unionByName _)
-    // normalize: the interleaved corpus carries string doc ids
-    // ("d%012d"); flat test tables carry numeric ones
-    val docs =
-      if (raw.schema("doc_id").dataType == org.apache.spark.sql.types.StringType)
-        raw.withColumn("doc_id",
-          graft.model.InterleavedCorpus.idOfDocId(col("doc_id")))
-      else raw
-    val points = docs
-      .withColumn("lat_mu", graft.geo.CoordSynthesis.latCol(col("doc_id")))
-      .withColumn("lon_mu", graft.geo.CoordSynthesis.lonCol(col("doc_id")))
+    val m = new MetricsLog(outDir).reset()
+    val points = input.points
 
     // ---- phase: split (density -> solve -> areas.* artifacts) ------
-    val solved = solveAreas(spark, a, cfg, points)
-    val areas = finalizeAreas(spark, a, solved, outDir)
+    val areas = m.step("split_solve") {
+      finalizeAreas(spark, a, solveAreas(spark, a, cfg, points), outDir)
+    }
     if (a.stopAfter == "split") return "split"
-    runLinkedPhases(spark, a, cfg, outDir, points, areas)
+
+    // ---- phase: gen-problem-list (border-crossing links) -----------
+    val index = SplitPipeline.buildIndex(areas, cfg)
+    val assignment = m.step("node_assignment") {
+      input.assignment(TileAssigner.withTileIds(spark, points,
+        col("lat_mu"), col("lon_mu"), index, cfg.nearestFallback))
+    }
+    // --problem-report names the problem-list artifact; the reference
+    // ignores it under --keep-complete=false (Main.java:451-453),
+    // with the same warning wording
+    val reportPath =
+      if (!a.keepComplete) {
+        if (a.problemReport.isDefined)
+          System.err.println("Parameter --problem-report is ignored, " +
+            "because parameter --keep-complete=false is used")
+        s"$outDir/problem.list"
+      } else a.problemReport.getOrElse(s"$outDir/problem.list")
+    val nProblems = input.writeProblemList(assignment, reportPath, m)
+    m.line("phase" -> "gen-problem-list", "problems" -> nProblems)
+    if (a.stopAfter == "gen-problem-list") return "gen-problem-list"
+
+    // ---- phase: handle-problem-list (keep-complete duplication) ----
+    if (cfg.keepComplete) {
+      val linkTiles = s"$outDir/link_tiles.parquet"
+      input.problemTiles(areas).write.mode("overwrite").parquet(linkTiles)
+      // read back, so the metric covers what actually landed on disk
+      m.partitions(spark.read.parquet(linkTiles), "handle-problem-list")
+    }
+    if (a.stopAfter == "handle-problem-list") return "handle-problem-list"
+
+    // ---- phase: dist (assignment fan-out, written per tile) --------
+    // --max-areas: at most maxAreas tiles are written per pass
+    // (reference Main.java:526, numPasses = ceil(areas / maxAreas)) —
+    // the pass count is a resource knob and MUST NOT change results
+    // (the reference's SolverAndProblemGeneratorTest asserts this
+    // invariance; MainSpec does the same here)
+    val rows = input.distRows(assignment, m)
+    val chunks = areas.grouped(a.maxAreas).toSeq
+    m.step("tile_sink") {
+      val written = chunks.zipWithIndex.flatMap { case (chunk, i) =>
+        input.writeTiles(rows, TilePass(chunk, i, chunks.size))
+      }
+      if (written.nonEmpty) m.line("phase" -> "dist", "rows_written" -> written.sum)
+    }
+    m.step("dist_metrics")(m.partitions(rows, input.distPhase))
+    rows.unpersist(false)
+    "dist"
   }
 
   /** The split phase's solve: split-file reuse, else density grid
     * (optionally sea-merged) -> BSP / polygon-constrained solve. */
-  private[app] def solveAreas(spark: SparkSession, a: SplitterArgs,
+  private def solveAreas(spark: SparkSession, a: SplitterArgs,
       cfg: SplitConfig, points: DataFrame): Seq[graft.output.AreaDef] =
     a.splitFile match {
       case Some(f) => AreaWriters.readAreasList(f) // split-file reuse
@@ -274,7 +300,7 @@ object Main {
   /** J6 naming (top-population geonames city per tile, else the
     * --description default — reference AreaList.setAreaNames:272-298)
     * plus the areas.list / template.args / areas.poly / kml artifacts. */
-  private[app] def finalizeAreas(spark: SparkSession, a: SplitterArgs,
+  private def finalizeAreas(spark: SparkSession, a: SplitterArgs,
       solved: Seq[graft.output.AreaDef], outDir: String): Seq[graft.output.AreaDef] = {
     val areas = a.geonamesFile match {
       case Some(gf) =>
@@ -297,132 +323,13 @@ object Main {
     areas
   }
 
-  /** The corpus pipeline's post-split phases (gen-problem-list ->
-    * handle-problem-list -> dist). */
-  private def runLinkedPhases(spark: SparkSession, a: SplitterArgs,
-      cfg: graft.pipeline.SplitConfig, outDir: String, points: DataFrame,
-      areas: Seq[graft.output.AreaDef]): String = {
-    // ---- phase: gen-problem-list (border-crossing links) -----------
-    // --problem-file replaces the computation entirely (reference
-    // Main.java:198-213 -> ProblemLists.readProblemIds:129-179);
-    // otherwise links are tag-filtered by the P5 relevance predicate
-    // when --boundary-tags / --wanted-admin-level are given
-    // (ProblemListProcessor.java:201-243) and border-crossers are
-    // detected via the salted membership aggregation.
-    // --problem-report names the problem-list artifact; the reference
-    // ignores it under --keep-complete=false (Main.java:451-453),
-    // with the same warning wording
-    val reportPath =
-      if (!a.keepComplete) {
-        if (a.problemReport.isDefined)
-          System.err.println("Parameter --problem-report is ignored, " +
-            "because parameter --keep-complete=false is used")
-        s"$outDir/problem.list"
-      } else a.problemReport.getOrElse(s"$outDir/problem.list")
-    val index = SplitPipeline.buildIndex(areas, cfg)
-    val assignment = TileAssigner.withTileIds(spark, points,
-      col("lat_mu"), col("lon_mu"), index, cfg.nearestFallback)
-    // problem links stay a Dataset end-to-end: the computed path
-    // never collects link ids to the driver — problem.list streams
-    // out one partition at a time and the handle phase semi-joins
-    // against the same checkpointed frame. Only --problem-file input
-    // is inherently a (bounded) driver artifact.
-    var fileIdCount = 0L
-    val problems: DataFrame = (a.problemFile match {
-      case Some(pf) =>
-        import spark.implicits._
-        val (ways, rels) = AreaWriters.readProblemList(pf)
-        val allIds = ways ++ rels
-        fileIdCount = allIds.size.toLong
-        // non-numeric ids can name links no corpus doc carries; they
-        // round-trip through problem.list but join nothing
-        AreaWriters.writeProblemList(reportPath, allIds, Nil)
-        allIds.flatMap(p => scala.util.Try(p.toLong).toOption)
-          .toDF("link_id")
-      case None =>
-        val allLinks = linksOf(points)
-        val considered =
-          if (a.boundaryTags.isEmpty && a.wantedAdminLevel.isEmpty) allLinks
-          else allLinks.where(RelevanceFilter.relevant(
-            RelevanceFilter.relTypeCol(col("link_id")),
-            RelevanceFilter.boundaryCol(col("link_id")),
-            RelevanceFilter.adminLevelCol(col("link_id")),
-            a.boundaryTags.getOrElse(RelevanceFilter.UseExcludeList),
-            a.wantedAdminLevel.getOrElse(RelevanceFilter.DefaultWantedAdminLevel)))
-        val linkTiles = LinkMembership.linkTiles(considered, assignment,
-          salted = true)
-        LinkMembership.problemLinks(linkTiles)
-    }).localCheckpoint(true)
-    val nProblems = a.problemFile match {
-      // metric counts what the problem.list artifact holds — ALL file
-      // ids, including non-numeric ones that join nothing
-      case Some(_) => fileIdCount
-      case None =>
-        // stream the sorted list to disk: bounded driver memory at any
-        // problem count (same byte format writeProblemList produces,
-        // string-sorted like its Seq[String] path)
-        AreaWriters.writeProblemListStreamed(reportPath, problems)
-    }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/metrics.jsonl"),
-      s"""{"phase":"gen-problem-list","problems":$nProblems}""" + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    if (a.stopAfter == "gen-problem-list") return "gen-problem-list"
-
-    // ---- phase: handle-problem-list (keep-complete duplication) ----
-    // only the problem links are handled — file-given or computed —
-    // matching the reference's handle-problem-list scope
-    // (MultiTileProcessor consumes exactly the problem list). The
-    // semi-joins are plain equi-joins on the checkpointed problem
-    // frame: Spark broadcasts it while it is small and falls back to
-    // a shuffled semi-join at planet-scale problem counts.
-    if (cfg.keepComplete) {
-      val members = points
-        .withColumn("link_id", graft.model.LinkModel.linkIdCol())
-        .join(problems, Seq("link_id"), "left_semi")
-      val p1 = points.select(col("doc_id").as("id1"),
-        col("lon_mu").as("x1"), col("lat_mu").as("y1"))
-      val p2 = points.select(col("doc_id").as("id2"),
-        col("lon_mu").as("x2"), col("lat_mu").as("y2"))
-      val segments = p1.where(graft.model.LinkModel.segmentStartCol("id1"))
-        .join(p2, col("id2") === col("id1") + 1)
-        .select(graft.model.LinkModel.linkIdCol("id1").as("link_id"),
-          col("x1"), col("y1"), col("x2"), col("y2"))
-        .join(problems, Seq("link_id"), "left_semi")
-      ProblemJoins.keepCompleteTiles(members, segments,
-          areas.map(_.rect), areas.map(_.mapId.toLong))
-        .write.mode("overwrite").parquet(s"$outDir/link_tiles.parquet")
-      // per-partition lineage of the phase artifact (read-back, so the
-      // metric covers what actually landed on disk)
-      SplitPipeline.recordMetrics(
-        spark.read.parquet(s"$outDir/link_tiles.parquet"),
-        "handle-problem-list", outDir)
-    }
-    if (a.stopAfter == "handle-problem-list") return "handle-problem-list"
-
-    // ---- phase: dist (assignment fan-out, partitioned by tile) -----
-    // --max-areas: at most maxAreas tiles are written per pass
-    // (reference Main.java:526, numPasses = ceil(areas / maxAreas)) —
-    // the pass count is a resource knob and MUST NOT change results
-    // (the reference's SolverAndProblemGeneratorTest asserts this
-    // invariance; MainSpec does the same here). Chunks partition the
-    // map_id space, so later passes append disjoint partitions.
-    val assigned = TileAssigner.explodeByTile(assignment, a.mapid)
-    val mapIds = areas.map(_.mapId)
-    if (mapIds.size <= a.maxAreas)
-      TileAssigner.writePartitioned(assigned, s"$outDir/tiles",
-        a.handleElementVersion)
-    else
-      mapIds.grouped(a.maxAreas).zipWithIndex.foreach { case (chunk, pass) =>
-        TileAssigner.writePartitioned(
-          assigned.where(col("map_id").isin(chunk.map(Int.box): _*)),
-          s"$outDir/tiles", a.handleElementVersion,
-          mode = if (pass == 0) "overwrite" else "append")
-      }
-    SplitPipeline.recordMetrics(assigned, "dist", outDir)
-    "dist"
-  }
+  /** Solved areas as a t_-prefixed broadcast dimension. */
+  private def tilesDimOf(spark: SparkSession,
+                         areas: Seq[graft.output.AreaDef]): DataFrame =
+    spark.createDataFrame(areas.map(ad =>
+      (ad.mapId.toLong, ad.rect.minLat.toLong, ad.rect.minLon.toLong,
+        ad.rect.maxLat.toLong, ad.rect.maxLon.toLong)))
+      .toDF("map_id", "t_min_lat", "t_min_lon", "t_max_lat", "t_max_lon")
 
   def main(args: Array[String]): Unit =
     SplitterArgs.parse(args.toSeq) match {

@@ -1,36 +1,13 @@
 package graft.app
 
-import graft.assign.{LinkMembership, ProblemJoins, TileAssigner}
-import graft.output.{AreaWriters, OsmTileSink}
-import graft.pipeline.SplitPipeline
+import graft.assign.{LinkMembership, ProblemJoins}
+import graft.output.{AreaDef, AreaWriters, MetricsLog, OsmTileSink}
 import graft.sources.OsmFileSource
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/**
- * The splitter pipeline over REAL OSM inputs (`.osm[.gz]` / `.o5m` /
- * `.pbf` via the DSv2 source): density -> solve -> areas artifacts,
- * then way/relation tile membership and the per-tile OSM file sink —
- * the reference's end-to-end flow (Main.java split()/genProblemLists/
- * writeAreas -> dist) re-expressed as DataFrame plans.
- *
- * Assignment semantics (reference MultiTileProcessor / SplitProcessor):
- *  - a node goes to every tile whose (overlap-extended) rect contains
- *    it;
- *  - a way goes to every tile holding at least one of its nodes;
- *  - a relation goes to every tile holding any member, where
- *    sub-relation membership propagates transitively (J8 closure,
- *    reference MultiTileProcessor.MTRelation loop resolution);
- *  - with --keep-complete, ways and relations are kept COMPLETE: every
- *    node of a way (and every node/way member of a relation) is copied
- *    into each tile the parent was assigned to. Completing ALL
- *    crossing links equals the reference's problem-list handling: a
- *    link contained in one tile contributes only members already in
- *    that tile, so the extra copies are exactly the problem links'.
- *
- * Every step is a bucketed equi-join or broadcast-index probe — no
- * driver-side entity data, so the same plan runs at planet scale.
- */
+/** OSM-file helpers shared by the phase driver, the source tests and
+  * the benchmarks. */
 object OsmSplit {
 
   def isOsmInput(p: String): Boolean =
@@ -50,76 +27,90 @@ object OsmSplit {
       lit(360.0)).cast("int")
   }
 
-  def run(spark: SparkSession, a: SplitterArgs): String = {
-    val cfg = a.toConfig
-    val outDir = a.outputDir
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$outDir/metrics.jsonl"))
+  /** The phase chain over OSM inputs: [[Main.run]], which runs them
+    * through [[OsmInput]]. */
+  def run(spark: SparkSession, a: SplitterArgs): String = Main.run(spark, a)
+}
 
-    // per-step wall time -> metrics.jsonl, so the cost profile of a
-    // run is observable (which stages are fixed-latency vs data-bound)
-    def timeStep[T](step: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/metrics.jsonl"),
-        String.format(java.util.Locale.ROOT, // comma-decimal locales would break the JSON
-          "{\"phase\":\"timing\",\"step\":\"%s\",\"sec\":%.3f}\n", step, Double.box(sec)),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      r
+/**
+ * OSM-file input of the phase driver (`.osm[.gz]` / `.o5m` / `.pbf`
+ * via the DSv2 source): nodes are the points; way/relation tile
+ * membership runs before the problem list, and the dist phase writes
+ * per-tile OSM files — the reference's end-to-end flow (Main.java
+ * split()/genProblemLists/writeAreas -> dist) as DataFrame plans.
+ *
+ * Assignment semantics (reference MultiTileProcessor / SplitProcessor):
+ *  - a node goes to every tile whose (overlap-extended) rect contains
+ *    it;
+ *  - a way goes to every tile holding at least one of its nodes;
+ *  - a relation goes to every tile holding any member, where
+ *    sub-relation membership propagates transitively (J8 closure,
+ *    reference MultiTileProcessor.MTRelation loop resolution);
+ *  - with --keep-complete, ways and relations are kept COMPLETE: every
+ *    node of a way (and every node/way member of a relation) is copied
+ *    into each tile the parent was assigned to. Completing ALL
+ *    crossing links equals the reference's problem-list handling: a
+ *    link contained in one tile contributes only members already in
+ *    that tile, so the extra copies are exactly the problem links'.
+ *
+ * Every step is a bucketed equi-join or broadcast-index probe — no
+ * driver-side entity data, so the same plan runs at planet scale.
+ */
+private[app] final class OsmInput(spark: SparkSession, a: SplitterArgs)
+    extends PhaseInput {
+
+  // these options only shape the corpus's problem list
+  for ((opt, v) <- Seq("--problem-file" -> a.problemFile, "--boundary-tags" -> a.boundaryTags,
+      "--wanted-admin-level" -> a.wantedAdminLevel) if v.isDefined)
+    throw new IllegalArgumentException(
+      s"Parameter $opt is not supported for OSM inputs (parquet corpus inputs only)")
+
+  private val ents = OsmFileSource.read(spark, a.inputs: _*)
+
+  // kind filter + column prune push into the scan (the reference's
+  // skipWays/skipRels/skipTags flags for the density pass)
+  val points: DataFrame = ents.where(col("kind") === lit("node"))
+    .select(col("id").as("doc_id"),
+      OsmSplit.mapUnitCol(col("lat7")).as("lat_mu"),
+      OsmSplit.mapUnitCol(col("lon7")).as("lon_mu"))
+
+  private val ways = ents.where(col("kind") === lit("way"))
+    .select(col("id").as("link_id"), col("refs").as("member_ids"))
+
+  // relation member edges; sub-relation membership via the J8 closure
+  private val relMembers = ents.where(col("kind") === lit("relation"))
+    .select(col("id").as("rel_id"), explode(col("members")).as("m"))
+    .select(col("rel_id"), col("m.mtype").as("mtype"), col("m.ref").as("ref"))
+
+  // set by writeProblemList: (link_id, tile_ids, is_problem),
+  // (rel_id, mtype, ref) of direct and sub-relation members, (rel_id, tile_ids)
+  private var wayTiles, resolvedMembers, relTiles: DataFrame = _
+
+  private def problemWays = wayTiles.where(col("is_problem"))
+  private def problemRels = relTiles.where(size(col("tile_ids")) > 1)
+
+  // NOTE (measured, do not "optimize"): persisting these intermediates
+  // via Dataset.persist to reuse a pre-join hash partitioning
+  // (InMemoryRelation keeps outputPartitioning; localCheckpoint's
+  // ExistingRDD does not) was tried and is 1.5-2x SLOWER end-to-end at
+  // 4.4M ents: the columnar cache encode/decode on every consumer
+  // outweighs the saved exchanges of these narrow rows. localCheckpoint
+  // stores raw UnsafeRows — cheap to write and re-scan.
+  override def assignment(probed: DataFrame): DataFrame =
+    probed.localCheckpoint(true) // one scan feeds node, way AND rel joins
+
+  def writeProblemList(assignment: DataFrame, path: String, m: MetricsLog): Long = {
+    wayTiles = m.step("way_membership") {
+      LinkMembership.linkTiles(ways, assignment, salted = true).localCheckpoint(true)
     }
-
-    val ents = OsmFileSource.read(spark, a.inputs: _*)
-    // kind filter + column prune push into the scan (the reference's
-    // skipWays/skipRels/skipTags flags for the density pass)
-    val nodes = ents.where(col("kind") === lit("node"))
-      .select(col("id").as("doc_id"),
-        mapUnitCol(col("lat7")).as("lat_mu"),
-        mapUnitCol(col("lon7")).as("lon_mu"))
-
-    // ---- phase: split ----------------------------------------------
-    val areas = timeStep("split_solve") {
-      Main.finalizeAreas(spark, a, Main.solveAreas(spark, a, cfg, nodes), outDir)
-    }
-    if (a.stopAfter == "split") return "split"
-
-    // ---- membership ------------------------------------------------
-    val index = SplitPipeline.buildIndex(areas, cfg)
-    // NOTE (measured, do not "optimize"): persisting these intermediates
-    // via Dataset.persist to reuse a pre-join hash partitioning
-    // (InMemoryRelation keeps outputPartitioning; localCheckpoint's
-    // ExistingRDD does not) was tried and is 1.5-2x SLOWER end-to-end at
-    // 4.4M ents: the columnar cache encode/decode on every consumer
-    // outweighs the saved exchanges of these narrow rows. localCheckpoint
-    // stores raw UnsafeRows — cheap to write and re-scan.
-    val assignment = timeStep("node_assignment") {
-      TileAssigner.withTileIds(spark, nodes,
-        col("lat_mu"), col("lon_mu"), index, cfg.nearestFallback)
-        .localCheckpoint(true) // one scan feeds node, way AND rel joins
-    }
-
-    val ways = ents.where(col("kind") === lit("way"))
-      .select(col("id").as("link_id"), col("refs").as("member_ids"))
-    val wayTiles = timeStep("way_membership") {
-      LinkMembership.linkTiles(ways, assignment, salted = true)
-        .localCheckpoint(true) // (link_id, tile_ids, is_problem)
-    }
-
-    // relation member edges; sub-relation membership via the J8 closure
-    val relMembers = ents.where(col("kind") === lit("relation"))
-      .select(col("id").as("rel_id"), explode(col("members")).as("m"))
-      .select(col("rel_id"), col("m.mtype").as("mtype"), col("m.ref").as("ref"))
     val relEdges = relMembers.where(col("mtype") === lit("relation"))
       .select(col("rel_id").as("parent_id"), col("ref").as("child_id"))
     // (rel_id, reachable rel) including itself, so direct members and
-    // sub-relation members resolve through one frame
-    // resolvedMembers feeds FOUR consumers (rel node/way tiles, wayAll,
-    // nodeExtra) — checkpointed so the closure join runs once, which also
-    // makes the rel_closure timing cover the whole closure resolution
-    val resolvedMembers = timeStep("rel_closure") {
+    // sub-relation members resolve through one frame. resolvedMembers
+    // feeds FOUR consumers (rel node/way tiles, wayAll, nodeExtra) —
+    // checkpointed so the closure join runs once, which also makes the
+    // rel_closure timing cover the whole closure resolution
+    resolvedMembers = m.step("rel_closure") {
       val reach = relMembers.select(col("rel_id")).distinct()
         .select(col("rel_id").as("root_id"), col("rel_id").as("leaf_id"))
         .unionByName(ProblemJoins.membershipClosure(relEdges))
@@ -132,58 +123,36 @@ object OsmSplit {
       .join(assignment.select(col("doc_id").as("ref"), col("tile_ids")), "ref")
     val relWayTiles = resolvedMembers.where(col("mtype") === lit("way"))
       .join(wayTiles.select(col("link_id").as("ref"), col("tile_ids")), "ref")
-    val relTiles = timeStep("rel_membership") {
+    relTiles = m.step("rel_membership") {
       relNodeTiles.unionByName(relWayTiles)
         .select(col("rel_id"), explode(col("tile_ids")).as("tid"))
         .groupBy("rel_id")
         .agg(sort_array(collect_set(col("tid"))).as("tile_ids"))
         .localCheckpoint(true)
     }
-
-    // ---- phase: gen-problem-list -----------------------------------
-    val reportPath =
-      if (!a.keepComplete) {
-        if (a.problemReport.isDefined)
-          System.err.println("Parameter --problem-report is ignored, " +
-            "because parameter --keep-complete=false is used")
-        s"$outDir/problem.list"
-      } else a.problemReport.getOrElse(s"$outDir/problem.list")
-    val problemWays = wayTiles.where(col("is_problem")).select(col("link_id"))
-    val problemRels = relTiles.where(size(col("tile_ids")) > 1).select(col("rel_id"))
-    val nProblems = timeStep("problem_list") {
-      AreaWriters.writeProblemListKinds(reportPath, problemWays, problemRels)
+    m.step("problem_list") {
+      AreaWriters.writeProblemListKinds(path, problemWays.select(col("link_id")),
+        problemRels.select(col("rel_id")))
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/metrics.jsonl"),
-      s"""{"phase":"gen-problem-list","problems":$nProblems}""" + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    if (a.stopAfter == "gen-problem-list") return "gen-problem-list"
+  }
 
-    // ---- phase: handle-problem-list --------------------------------
-    // artifact parity with the corpus pipeline: the problem links'
-    // tile pairs land as link_tiles.parquet (kind column because way
-    // and relation ids are separate OSM namespaces)
-    if (cfg.keepComplete) {
-      val wayPairs = wayTiles.where(col("is_problem"))
-        .select(lit("way").as("kind"), col("link_id"),
-          explode(col("tile_ids")).as("tid"))
-      val relPairs = relTiles.where(size(col("tile_ids")) > 1)
-        .select(lit("relation").as("kind"), col("rel_id").as("link_id"),
-          explode(col("tile_ids")).as("tid"))
-      wayPairs.unionByName(relPairs)
-        .select(col("kind"), col("link_id"),
-          (col("tid") + a.mapid).cast("long").as("map_id"))
-        .write.mode("overwrite").parquet(s"$outDir/link_tiles.parquet")
-      SplitPipeline.recordMetrics(
-        spark.read.parquet(s"$outDir/link_tiles.parquet"),
-        "handle-problem-list", outDir)
-    }
-    if (a.stopAfter == "handle-problem-list") return "handle-problem-list"
+  // artifact parity with the corpus input: the problem links' tile
+  // pairs (kind column because way and relation ids are separate OSM
+  // namespaces)
+  def problemTiles(areas: Seq[AreaDef]): DataFrame = {
+    val wayPairs = problemWays
+      .select(lit("way").as("kind"), col("link_id"),
+        explode(col("tile_ids")).as("tid"))
+    val relPairs = problemRels
+      .select(lit("relation").as("kind"), col("rel_id").as("link_id"),
+        explode(col("tile_ids")).as("tid"))
+    wayPairs.unionByName(relPairs)
+      .select(col("kind"), col("link_id"),
+        (col("tid") + a.mapid).cast("long").as("map_id"))
+  }
 
-    // ---- phase: dist -----------------------------------------------
-    // per-kind (id -> map_id) assignments
-    val startId = a.mapid
+  // per-kind (kind, id, map_id) assignments
+  def distRows(assignment: DataFrame, m: MetricsLog): DataFrame = {
     val nodeBase = assignment
       .select(col("doc_id").as("id"), explode(col("tile_ids")).as("tid"))
     val wayAssign = wayTiles
@@ -196,14 +165,14 @@ object OsmSplit {
     // arrives with its nodes — the reference's transitive
     // mark-needed), plus direct node members of relations
     val wayAll =
-      if (!cfg.keepComplete) wayAssign
+      if (!a.keepComplete) wayAssign
       else wayAssign.unionByName(
         resolvedMembers.where(col("mtype") === lit("way"))
           .select(col("rel_id"), col("ref").as("id"))
           .join(relTiles, "rel_id")
           .select(col("id"), explode(col("tile_ids")).as("tid"))).distinct()
     val nodeExtra =
-      if (!cfg.keepComplete) nodeBase.limit(0)
+      if (!a.keepComplete) nodeBase.limit(0)
       else {
         val viaWays = ways
           .select(col("link_id"), explode(col("member_ids")).as("id"))
@@ -231,57 +200,35 @@ object OsmSplit {
     val pairs = nodeBase.unionByName(nodeExtra).withColumn("kind", lit("node"))
       .unionByName(wayAll.withColumn("kind", lit("way")))
       .unionByName(relAssign.withColumn("kind", lit("relation")))
-      .select(col("kind"), col("id"), (col("tid") + startId).as("map_id"))
+      .select(col("kind"), col("id"), (col("tid") + a.mapid).as("map_id"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    timeStep("assign_pairs")(pairs.count()) // materialize once, timed apart
-                                            // from the first sink pass
+    m.step("assign_pairs")(pairs.count()) // materialize once, timed apart
+                                          // from the first sink pass
+    pairs
+  }
 
+  // per-partition counts of the ASSIGNMENT pairs (distinct from the
+  // written rows: pairs whose entity is missing from a clipped input
+  // never reach a tile)
+  val distPhase = "dist_pairs"
+
+  def writeTiles(pairs: DataFrame, pass: TilePass): Option[Long] = {
     def assembledOf(p: DataFrame): DataFrame = ents.join(p, Seq("kind", "id"))
-
-    val mapIds = areas.map(_.mapId)
-    timeStep("tile_sink") {
-      a.output match {
-        case "o5m" | "xml" | "pbf" =>
-          val tilesDir = s"$outDir/tiles"
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tilesDir))
-          // --max-areas: at most maxAreas tile FILES open per pass
-          // (reference Main.java:526) — pass count must not change bytes.
-          // Each pass gets ONLY its chunk's areas (bounds + empty-tile
-          // backfill scope to the pass, not the whole area list).
-          var written = 0L
-          mapIds.grouped(a.maxAreas).foreach { chunk =>
-            val chunkSet = chunk.toSet
-            written += OsmTileSink.write(
-              assembledOf(pairs.where(col("map_id").isin(chunk.map(Int.box): _*))),
-              tilesDir, a.output, areas.filter(ar => chunkSet(ar.mapId)),
-              a.handleElementVersion)
-          }
-          // rows ACTUALLY written (assignments whose entity exists in the
-          // input; dangling refs on clipped extracts drop at the join)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$outDir/metrics.jsonl"),
-            s"""{"phase":"dist","rows_written":$written}""" + "\n",
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.APPEND)
-        case _ =>
-          if (mapIds.size <= a.maxAreas)
-            TileAssigner.writePartitioned(assembledOf(pairs), s"$outDir/tiles",
-              a.handleElementVersion)
-          else
-            mapIds.grouped(a.maxAreas).zipWithIndex.foreach { case (chunk, pass) =>
-              TileAssigner.writePartitioned(
-                assembledOf(pairs.where(col("map_id").isin(chunk.map(Int.box): _*))),
-                s"$outDir/tiles", a.handleElementVersion,
-                mode = if (pass == 0) "overwrite" else "append")
-            }
-      }
+    a.output match {
+      case "o5m" | "xml" | "pbf" =>
+        // at most maxAreas tile FILES open per pass; each pass gets ONLY
+        // its chunk's areas (bounds + empty-tile backfill scope to the
+        // pass, not the whole area list). Rows ACTUALLY written:
+        // assignments whose entity exists in the input (dangling refs on
+        // clipped extracts drop at the join)
+        val tilesDir = s"${a.outputDir}/tiles"
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tilesDir))
+        Some(OsmTileSink.write(assembledOf(pass.rowsOf(pairs)), tilesDir, a.output,
+          pass.areas, a.handleElementVersion))
+      case _ =>
+        pass.writeParquet(assembledOf(pass.chunkOf(pairs)), a)
+        None
     }
-    // per-partition counts of the ASSIGNMENT pairs (distinct from the
-    // written rows above: pairs whose entity is missing from a clipped
-    // input never reach a tile)
-    timeStep("dist_metrics")(SplitPipeline.recordMetrics(pairs, "dist_pairs", outDir))
-    pairs.unpersist(false)
-    "dist"
   }
 }

@@ -51,15 +51,6 @@ object ProblemJoins {
       min(col("lat_mu")).as("min_lat"), min(col("lon_mu")).as("min_lon"),
       max(col("lat_mu")).as("max_lat"), max(col("lon_mu")).as("max_lon"))
 
-  /** Closed rect-rect intersection predicate (shared edges count,
-    * matching the engine's closed-boundary semantics). The Column
-    * form is the executable definition [[TileIndex.probeRect]] is
-    * property-tested against. */
-  def rectIntersects(aMinLat: Column, aMinLon: Column, aMaxLat: Column, aMaxLon: Column,
-                     bMinLat: Column, bMinLon: Column, bMaxLat: Column, bMaxLon: Column): Column =
-    aMinLat <= bMaxLat && aMaxLat >= bMinLat &&
-      aMinLon <= bMaxLon && aMaxLon >= bMinLon
-
   /** J4: every (link, tile) pair whose bbox intersects the tile rect.
     * Cell-bucketed probe + explode — no join operator, no per-row
     * scan of the tile dimension. */

@@ -39,10 +39,6 @@ object TileAssigner {
       .withColumn("map_id", col("tid") + startMapId)
       .drop("tile_ids", "tid")
 
-  /** Per-tile row counts (the assign_counts oracle). */
-  def tileCounts(assigned: DataFrame): DataFrame =
-    assigned.groupBy("map_id").agg(count(lit(1)).as("doc_count"))
-
   /** Element-version output policy (reference
     * `writer/AbstractOSMWriter.java:28-62`): keep the column, fake it
     * to a constant, or remove it. */

@@ -1,6 +1,6 @@
 package graft.density
 
-import graft.geo.{MapUnits, TileRect}
+import graft.geo.TileRect
 import java.io.{BufferedReader, FileReader, FileWriter}
 
 /**
@@ -29,11 +29,6 @@ final class DensityGrid(val bounds: TileRect, val resolution: Int) {
   private var total: Long = 0L
 
   def totalCount: Long = total
-
-  def cellCount(x: Int, y: Int): Int = {
-    val c = cols(x)
-    if (c == null) 0 else c(y)
-  }
 
   /** Backing column array (null = empty column). Read-only view for
     * bulk consumers ([[graft.solver.SolverGrid]] prefix builds) —
@@ -66,10 +61,6 @@ final class DensityGrid(val bounds: TileRect, val resolution: Int) {
   def latToCellY(lat: Int): Int = (lat - bounds.minLat) >>> shift
   def lonToCellX(lon: Int): Int = (lon - bounds.minLon) >>> shift
 
-  /** Map-unit rectangle of the grid-cell rectangle [x, x+w) x [y, y+h). */
-  def cellRect(x: Int, y: Int, w: Int, h: Int): TileRect =
-    TileRect(cellToLat(y), cellToLon(x), cellToLat(y + h), cellToLon(x + w))
-
   /** Restrict to the intersection with `subsetBounds` (aligned). */
   def subset(subsetBounds: TileRect): DensityGrid = {
     val inter = bounds.intersection(subsetBounds)
@@ -91,30 +82,6 @@ final class DensityGrid(val bounds: TileRect, val resolution: Int) {
       x += 1
     }
     out
-  }
-
-  /** Merge a sea/background grid: any cell empty here but non-zero in
-    * `sea` gets `seaCount * factor` (reference
-    * `DensityMap.mergeSeaData:349-428`, SEA_NODE_FACTOR = 2). */
-  def mergeBackground(sea: DensityGrid, factor: Int = 2): Unit = {
-    require(sea.resolution == resolution, "resolution mismatch")
-    var x = 0
-    while (x < width) {
-      val lon = cellToLon(x)
-      if (lon >= sea.bounds.minLon && lon < sea.bounds.maxLon) {
-        val sx = sea.lonToCellX(lon)
-        var y = 0
-        while (y < height) {
-          val lat = cellToLat(y)
-          if (cellCount(x, y) == 0 && lat >= sea.bounds.minLat && lat < sea.bounds.maxLat) {
-            val n = sea.cellCount(sx, sea.latToCellY(lat))
-            if (n > 0) addToCell(x, y, n * factor)
-          }
-          y += 1
-        }
-      }
-      x += 1
-    }
   }
 
   /** densities.txt-compatible dump: two bbox header lines then
@@ -143,17 +110,6 @@ final class DensityGrid(val bounds: TileRect, val resolution: Int) {
 }
 
 object DensityGrid {
-  /** Build from a collected distributed cell histogram. */
-  def fromCells(bounds: TileRect, resolution: Int,
-                cells: Iterable[(Int, Int, Long)]): DensityGrid = {
-    val g = new DensityGrid(bounds.roundedTo(resolution), resolution)
-    cells.foreach { case (x, y, n) =>
-      require(n <= Int.MaxValue, s"cell ($x,$y) overflows Int: $n")
-      if (n > 0) g.addToCell(x, y, n.toInt)
-    }
-    g
-  }
-
   /** Reload a [[DensityGrid.save]] dump (reference
     * `DensityMap.readMap:258-332`). */
   def load(path: String, resolution: Int): (DensityGrid, TileRect) = {

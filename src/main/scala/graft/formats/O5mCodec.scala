@@ -94,7 +94,6 @@ final class O5mReader(in: InputStream, spec: OsmReadSpec = OsmReadSpec(),
     * opens belongs to the next byte-range partition — see
     * [[graft.sources.O5mRangeIterator]]). */
   private var consumed = 0L
-  def bytesConsumed: Long = consumed
 
   // delta state (reset on 0xff)
   private var lastNodeId = 0L

@@ -30,12 +30,6 @@ object RectAlgebra {
   def pseudoAreas(rects: Seq[TileRect], outer: TileRect = TileRect.Planet): Seq[TileRect] =
     gridMerge(rects, covered = false, outer = Some(outer))
 
-  /** `rects` (made disjoint) plus pseudo rects: a disjoint exact cover
-    * of `outer` — the catch-all-else bucket construction. */
-  def coverOuter(rects: Seq[TileRect], outer: TileRect = TileRect.Planet)
-  : (Seq[TileRect], Seq[TileRect]) =
-    (nonOverlapping(rects), pseudoAreas(rects, outer))
-
   private def gridMerge(rects: Seq[TileRect], covered: Boolean,
                         outer: Option[TileRect]): Seq[TileRect] = {
     val clipped = outer match {

@@ -21,9 +21,6 @@ object InterleavedCorpus {
   /** Numeric id back out of a doc_id string. */
   def idOfDocId(docId: Column): Column = substring(docId, 2, 12).cast("long")
 
-  /** SQL text (DuckDB-compatible) recovering the numeric id. */
-  def idOfDocIdSql(col: String): String = s"CAST(substr($col, 2, 12) AS BIGINT)"
-
   /**
    * Spans for a numeric id + source text: `1 + id % 7` spans; span i
    * is text (kinds 0-5 of a 10-way code) carrying the i-th 16-char

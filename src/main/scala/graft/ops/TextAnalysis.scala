@@ -34,9 +34,6 @@ object TextAnalysis {
     }
   }
 
-  /** Tokens per document. */
-  def tokenCount(text: Column): Column = size(TextDedup.tokens(text))
-
   /**
    * Quality metrics per doc: token count, mean token length (ppm),
    * stopword ratio (ppm), repetition = most frequent token count.

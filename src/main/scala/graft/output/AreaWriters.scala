@@ -122,9 +122,10 @@ object AreaWriters {
     } finally pw.close()
   }
 
-  /** Streamed kinded [[writeProblemList]] for OSM inputs: way lines
-    * then rel lines, each string-sorted, pulled one partition at a
-    * time. Returns the total id count. */
+  /** Streamed [[writeProblemList]] for Datasets of ids (first column):
+    * way lines then rel lines, each string-sorted, pulled to the driver
+    * one partition at a time — bounded memory at any problem count.
+    * Returns the total id count. */
   def writeProblemListKinds(path: String,
                             wayIds: org.apache.spark.sql.DataFrame,
                             relIds: org.apache.spark.sql.DataFrame): Long = {
@@ -145,29 +146,6 @@ object AreaWriters {
       }
       emit(wayIds, "way:")
       emit(relIds, "rel:")
-      n
-    } finally pw.close()
-  }
-
-  /** Streamed [[writeProblemList]] for a Dataset of link ids:
-    * identical byte format (string-sorted way lines), pulled to the
-    * driver ONE PARTITION AT A TIME — bounded memory at any problem
-    * count. Returns the number of ids written. */
-  def writeProblemListStreamed(path: String,
-                               linkIds: org.apache.spark.sql.DataFrame): Long = {
-    import org.apache.spark.sql.functions.col
-    val pw = new PrintWriter(new FileWriter(path))
-    try {
-      pw.println("#")
-      pw.println("# This file can be given to splitter using the --problem-file option")
-      pw.println("#")
-      var n = 0L
-      val it = linkIds.select(col("link_id").cast("string").as("id"))
-        .orderBy("id").toLocalIterator()
-      while (it.hasNext) {
-        pw.println(s"way: ${it.next().getString(0)} #")
-        n += 1
-      }
       n
     } finally pw.close()
   }

@@ -5,7 +5,7 @@ import graft.density.{DensityGrid, DensityJob}
 import graft.geo.{CoordSynthesis, TileRect}
 import graft.index.TileIndex
 import graft.model.InterleavedCorpus
-import graft.output.{AreaDef, AreaWriters}
+import graft.output.{AreaDef, AreaWriters, MetricsLog}
 import graft.solver.BspSolver
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -154,19 +154,8 @@ object SplitPipeline {
     SplitResult(areas, grid, assigned)
   }
 
-  /** Per-partition lineage + row-count metrics of a phase output —
-    * the observability contract (one cheap aggregation; appended as
-    * JSONL so successive phases/rounds accumulate). */
-  def recordMetrics(df: DataFrame, phase: String, outDir: String): Unit = {
-    val rows = df.groupBy(org.apache.spark.sql.functions.spark_partition_id()
-        .as("partition_id"))
-      .agg(count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-      .collect()
-    val lines = rows.map(r =>
-      s"""{"phase":"$phase","partition":${r.getInt(0)},"rows":${r.getLong(1)}}""")
-    Files.writeString(Paths.get(s"$outDir/metrics.jsonl"),
-      lines.mkString("", "\n", "\n"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-  }
+  /** Per-partition row counts of a phase output, appended to
+    * `outDir/metrics.jsonl` so successive phases accumulate. */
+  def recordMetrics(df: DataFrame, phase: String, outDir: String): Unit =
+    new MetricsLog(outDir).partitions(df, phase)
 }

@@ -58,8 +58,6 @@ final class BspSolver(val grid: DensityGrid,
   private var goodSolutions = mutable.HashMap.empty[GridTile, BspSolution]
   private var goodRatio = 0.5
 
-  def hasData: Boolean = grid.totalCount > 0
-
   private def log(s: => String): Unit = if (!quiet) println(s)
 
   /** Solve the whole grid into tile rectangles in map units. */

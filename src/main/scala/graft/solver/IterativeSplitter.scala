@@ -1,6 +1,7 @@
 package graft.solver
 
 import graft.geo.{MapUnits, TileRect}
+import graft.output.MetricsLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,15 +88,6 @@ final class IterativeSplitter(spark: SparkSession, bounds: TileRect,
         .flatMap("""round_(\d+)\.json""".r.findFirstMatchIn(_).map(_.group(1).toInt))
       if (rounds.isEmpty) None else Some(rounds.max)
     }
-  }
-
-  /** Append per-round, per-tile metrics (lineage: which parent a tile
-    * came from, node counts) — the observability contract. */
-  private def logMetrics(round: Int, entries: Seq[String]): Unit = {
-    Files.createDirectories(Paths.get(checkpointDir))
-    Files.writeString(Paths.get(s"$checkpointDir/metrics.jsonl"),
-      entries.mkString("", "\n", "\n"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
   }
 
   /** [[TileIndex]] over tiles in GRID coordinates: the closed integer
@@ -200,8 +192,8 @@ final class IterativeSplitter(spark: SparkSession, bounds: TileRect,
                 (Tile(nextId, t.x, t.y, t.w, splitAt, leftCount),
                   Tile(nextId + 1, t.x, t.y + splitAt, t.w, t.h - splitAt, t.count - leftCount))
             nextId += 2
-            metrics += s"""{"round":${round + 1},"parent":${t.id},"child":${c0.id},"count":${c0.count}}"""
-            metrics += s"""{"round":${round + 1},"parent":${t.id},"child":${c1.id},"count":${c1.count}}"""
+            for (c <- Seq(c0, c1)) metrics += MetricsLog.json("round" -> (round + 1),
+              "parent" -> t.id, "child" -> c.id, "count" -> c.count)
             Seq(c0, c1)
         }
       }
@@ -209,7 +201,8 @@ final class IterativeSplitter(spark: SparkSession, bounds: TileRect,
       round += 1
       tiles = newTiles
       saveState(round, tiles)
-      logMetrics(round, metrics.toSeq)
+      // per-round, per-tile lineage: which parent a tile came from
+      new MetricsLog(checkpointDir).append(metrics)
     }
 
     // final trim: shrink every tile to its occupied cell bbox (one

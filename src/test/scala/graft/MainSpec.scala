@@ -93,6 +93,30 @@ class MainSpec extends AnyFunSuite {
     assert(onePass.exceptAll(chunked).isEmpty &&
       chunked.exceptAll(onePass).isEmpty,
       "chunked multi-pass write must equal the single-pass write")
+
+    // OSM input through the o5m sink: the same tile bytes and the same
+    // rows_written total, whatever the pass count
+    val dir = java.nio.file.Files.createTempDirectory("graft_maxareas_osm").toString
+    OsmFixture.writeFile(s"$dir/in.o5m", OsmFixture.corpus(2000))
+    def osmWith(extra: Seq[String], out: String): (Map[String, Seq[Byte]], String) = {
+      val a = SplitterArgs.parse(Seq(s"--output-dir=$dir/$out", "--max-nodes=300",
+        "--output=o5m", s"$dir/in.o5m") ++ extra).toOption.get
+      assert(Main.run(spark, a) === "dist")
+      val tiles = new java.io.File(s"$dir/$out/tiles").listFiles().toSeq
+        .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+      val metrics = scala.io.Source.fromFile(s"$dir/$out/metrics.jsonl")
+      val written = try metrics.getLines().filter(_.contains("rows_written")).mkString
+        finally metrics.close()
+      (tiles, written)
+    }
+    val (osmOne, writtenOne) = osmWith(Nil, "one")
+    val (osmChunked, writtenChunked) = osmWith(Seq("--max-areas=2"), "chunked")
+    assert(osmOne.size > 2, "fixture must actually need multiple passes at max-areas=2")
+    assert(osmChunked.keySet === osmOne.keySet)
+    osmOne.foreach { case (name, bytes) =>
+      assert(osmChunked(name) === bytes, s"tile $name differs between pass counts")
+    }
+    assert(writtenChunked === writtenOne && writtenOne.nonEmpty)
   }
 
   test("--problem-report redirects the problem list artifact") {
@@ -146,6 +170,44 @@ class MainSpec extends AnyFunSuite {
     // assignment totality: fan-out >= input (border duplication)
     assert(tiles.count() >= docs.count())
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/link_tiles.parquet")))
+
+    // OSM input: each gate stops before the next phase's artifact
+    val osmDir = java.nio.file.Files.createTempDirectory("graft_main_osm").toString
+    OsmFixture.writeFile(s"$osmDir/in.o5m", OsmFixture.corpus(1000))
+    val phases = Seq("split" -> "areas.list", "gen-problem-list" -> "problem.list",
+      "handle-problem-list" -> "link_tiles.parquet", "dist" -> "tiles")
+    for (((stop, _), i) <- phases.zipWithIndex) {
+      val osmOut = s"$osmDir/$stop"
+      val a = SplitterArgs.parse(Seq(s"--output-dir=$osmOut", s"--stop-after=$stop",
+        "--max-nodes=300", "--output=o5m", s"$osmDir/in.o5m")).toOption.get
+      assert(Main.run(spark, a) === stop)
+      for (((_, artifact), j) <- phases.zipWithIndex)
+        assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$osmOut/$artifact")) === (j <= i),
+          s"--stop-after=$stop: $artifact")
+    }
+  }
+
+  /** The message of the IllegalArgumentException `Main.run` raises. */
+  private def rejected(args: String*): String =
+    intercept[IllegalArgumentException](
+      Main.run(spark, SplitterArgs.parse(args).toOption.get)).getMessage
+
+  test("OSM input rejects --problem-file instead of ignoring it") {
+    assert(rejected("--problem-file=given.list", "in.o5m").contains("--problem-file"))
+  }
+
+  test("OSM input rejects --boundary-tags instead of ignoring it") {
+    assert(rejected("--boundary-tags=census", "in.pbf").contains("--boundary-tags"))
+  }
+
+  test("OSM input rejects --wanted-admin-level instead of ignoring it") {
+    assert(rejected("--wanted-admin-level=8", "in.osm.gz").contains("--wanted-admin-level"))
+  }
+
+  test("mixed OSM and parquet inputs are rejected, naming the inputs") {
+    val msg = rejected("in.o5m", "docs.parquet")
+    assert(msg.contains("Mixed OSM and parquet inputs") && msg.contains("in.o5m") &&
+      msg.contains("docs.parquet"), msg)
   }
 
   test("--polygon-file constrains the solve to the polygon") {

@@ -2,12 +2,12 @@ package graft
 
 import java.io.{BufferedInputStream, ByteArrayOutputStream, FileInputStream, FileOutputStream}
 import java.nio.file.Files
-import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+import java.util.zip.GZIPInputStream
 import scala.util.Random
 
 import graft.app.{Main, OsmSplit, SplitterArgs}
 import graft.formats._
-import graft.sources.{OsmFileSource, OsmScan}
+import graft.sources.OsmScan
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -29,52 +29,7 @@ class OsmPipelineSpec extends AnyFunSuite {
   private def tmpDir(): String =
     Files.createTempDirectory("graft_osm").toString
 
-  /** Two dense hotspots so the solver must split; ways chain nearby
-    * nodes (some crossing between hotspots), relations nest. */
-  private def corpus(nNodes: Int = 4000): Vector[OsmEntity] = {
-    val rnd = new Random(7)
-    val nodes = Vector.tabulate(nNodes) { i =>
-      val hot = i % 2
-      val baseLat = if (hot == 0) 100000000 else 140000000 // 10N / 14N
-      val baseLon = if (hot == 0) 200000000 else 260000000
-      OsmEntity.node(1000L + i, baseLat + rnd.nextInt(20000000),
-        baseLon + rnd.nextInt(20000000), version = 1,
-        tags = if (i % 50 == 0) Vector(OsmTag("amenity", "cafe"),
-          OsmTag("created_by", "editor")) else Vector.empty)
-    }
-    val ways = Vector.tabulate(300) { i =>
-      // every 5th way spans both hotspots -> guaranteed problem ways
-      val refs =
-        if (i % 5 == 0) Vector(1000L + 2 * i, 1000L + 2 * i + 1, 1000L + 2 * i + 2)
-        else Vector.tabulate(4)(j => 1000L + 2 * i + 2 * j)
-      OsmEntity.way(50000L + i, refs, version = 1,
-        tags = Vector(OsmTag("highway", "track")))
-    }
-    val rels = Vector.tabulate(30) { i =>
-      val members =
-        Vector(OsmMember(OsmKind.Way, 50000L + i * 5, "outer"),
-          OsmMember(OsmKind.Node, 1000L + i * 7, "")) ++
-          (if (i < 10) Vector(OsmMember(OsmKind.Relation, 80000L + i + 1, "subarea"))
-           else Vector.empty)
-      OsmEntity.relation(80000L + i, members, version = 1,
-        tags = Vector(OsmTag("type", "multipolygon")))
-    }
-    nodes ++ ways ++ rels
-  }
-
-  private def writeFile(path: String, es: Seq[OsmEntity]): Unit = {
-    val fmt = OsmFileSource.formatOf(path)
-    val fos = new FileOutputStream(path)
-    fmt match {
-      case "o5m" =>
-        val w = new O5mWriter(fos); es.foreach(w.write); w.finish(); fos.close()
-      case "pbf" =>
-        val w = new PbfWriter(fos); es.foreach(w.write); w.finish(); fos.close()
-      case _ =>
-        val out = if (path.endsWith(".gz")) new GZIPOutputStream(fos) else fos
-        val w = new OsmXmlWriter(out); es.foreach(w.write); w.finish(); out.close()
-    }
-  }
+  import OsmFixture.{corpus, writeFile}
 
   private def key(e: OsmEntity) = (e.kind, e.id)
 
@@ -255,12 +210,14 @@ class OsmPipelineSpec extends AnyFunSuite {
     val byId = es.map(e => key(e) -> e).toMap
     var waysSeen = Set.empty[Long]
     var relsSeen = Set.empty[Long]
+    var decoded = 0L
     areas.foreach { ad =>
       val f = new java.io.File(s"$out/tiles", f"${ad.mapId}%08d.o5m")
       assert(f.isFile, s"missing tile ${f.getName}")
       val r = new O5mReader(new BufferedInputStream(new FileInputStream(f)))
       val tile = r.toVector
       r.close()
+      decoded += tile.size
       val nodeIds = tile.filter(_.kind == OsmKind.Node).map(_.id).toSet
       val wayIds = tile.filter(_.kind == OsmKind.Way).map(_.id).toSet
       tile.filter(_.kind == OsmKind.Way).foreach { w =>
@@ -294,6 +251,21 @@ class OsmPipelineSpec extends AnyFunSuite {
       r.close(); ids
     }.toSet
     assert(allTileNodes === es.filter(_.kind == OsmKind.Node).map(_.id).toSet)
+
+    // the metrics.jsonl contract the benchmark reads: timing steps in
+    // phase order, one gen-problem-list line, and rows_written equal to
+    // the entities the tiles decode to
+    val src = scala.io.Source.fromFile(s"$out/metrics.jsonl")
+    val lines = try src.getLines().toVector finally src.close()
+    val timing = """\{"phase":"timing","step":"([a-z_]+)","sec":[0-9]+\.[0-9]{3}\}""".r
+    val steps = lines.collect { case timing(step) => step }
+    assert(steps === Seq("split_solve", "node_assignment", "way_membership", "rel_closure",
+      "rel_membership", "problem_list", "assign_pairs", "tile_sink", "dist_metrics"))
+    assert(lines.count(_.contains("\"timing\"")) === steps.size, "malformed timing line")
+    assert(lines.count(_.startsWith("""{"phase":"gen-problem-list","problems":""")) === 1)
+    val written = lines.flatMap(""""rows_written":([0-9]+)""".r.findFirstMatchIn(_))
+      .map(_.group(1).toLong)
+    assert(written === Seq(decoded))
   }
 
   test("tile sink: rerun overwrite, empty-area backfill, splittable o5m opt-in") {

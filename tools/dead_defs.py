@@ -1,0 +1,80 @@
+#!/usr/bin/env python3
+"""List `def`s under src/main/scala that nothing calls.
+
+A def counts as called when its name appears anywhere in src/,
+perfbench/src or tools/ other than on the lines that define it
+(a Scaladoc link counts too). Overrides are skipped, and so are the
+callbacks in ALLOWED that the JVM or Spark calls by name.
+
+Usage: python3 tools/dead_defs.py   (from the repository root)
+Prints one `path:line: def name` per finding and exits 1 if any.
+"""
+import collections
+import os
+import re
+import sys
+
+SCAN_ROOTS = ["src", "perfbench/src", "tools"]
+DEF_ROOT = "src/main/scala"
+
+# Called by the JVM or Spark, not by name from this code base: file
+# (None = any file) -> def names.
+ALLOWED = {
+    # entry points and Java serialization hooks
+    None: {"main", "writeObject", "readObject"},
+    # DSv2 batch and streaming interfaces
+    "src/main/scala/graft/sources/OsmFileSource.scala": {
+        "shortName", "inferSchema", "getTable", "name", "schema", "capabilities",
+        "newScanBuilder", "pruneColumns", "pushFilters", "pushedFilters", "build",
+        "readSchema", "toBatch", "description", "planInputPartitions",
+        "createReaderFactory", "toMicroBatchStream", "initialOffset", "latestOffset",
+        "deserializeOffset", "commit", "stop", "createReader", "next", "get", "close",
+        "json"},
+}
+
+IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+DEF = re.compile(r"\bdef\s+([A-Za-z_][A-Za-z0-9_]*)")
+
+
+def source_files(root):
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if x != "target" and not x.startswith(".")]
+        for f in files:
+            yield os.path.join(d, f)
+
+
+def read_text(path):
+    try:
+        with open(path, encoding="utf-8") as fh:
+            return fh.read()
+    except (UnicodeDecodeError, OSError):
+        return None  # binary data, e.g. parquet fixtures
+
+
+def main():
+    uses = collections.Counter()
+    defs = collections.defaultdict(list)  # name -> [(path, line)]
+    for root in SCAN_ROOTS:
+        for path in source_files(root):
+            text = read_text(path)
+            if text is None:
+                continue
+            uses.update(IDENT.findall(text))
+            if not (path.startswith(DEF_ROOT + os.sep) and path.endswith(".scala")):
+                continue
+            for n, line in enumerate(text.splitlines(), 1):
+                for m in DEF.finditer(line):
+                    name = m.group(1)
+                    allowed = ALLOWED[None] | ALLOWED.get(path.replace(os.sep, "/"), set())
+                    if "override" in line[:m.start()].split() or name in allowed or name == "this":
+                        continue
+                    defs[name].append((path, n))
+    dead = sorted((path, n, name) for name, sites in defs.items()
+                  if uses[name] <= len(sites) for path, n in sites)
+    for path, n, name in dead:
+        print(f"{path}:{n}: def {name}")
+    return 1 if dead else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
