@@ -250,12 +250,9 @@ object Main {
         // --precomp-sea: coastline points of the covering mixed tiles
         // merged as the sea background (empty land cells take sea*2,
         // reference Main.java:252-257 -> DensityMap.mergeSeaData)
-        val grid = a.precompSea match {
-          case Some(seaDir) =>
-            val sea = graft.sources.PrecompSea.readSeaPoints(spark, seaDir, bounds)
-            SplitPipeline.computeGridWithSea(points, sea, cfgB)
-          case None => SplitPipeline.computeGrid(points, cfgB)
-        }
+        val sea = a.precompSea.map(
+          graft.sources.PrecompSea.readSeaPoints(spark, _, bounds))
+        val grid = SplitPipeline.computeGrid(points, cfgB, sea)
         // --polygon-desc-file (named polygons, takes precedence like
         // the reference's readPolygonDescFile after readPolygonFile,
         // AreasCalculator.java:52-53) or --polygon-file constrain the

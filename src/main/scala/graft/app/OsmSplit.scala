@@ -101,7 +101,7 @@ private[app] final class OsmInput(spark: SparkSession, a: SplitterArgs)
 
   def writeProblemList(assignment: DataFrame, path: String, m: MetricsLog): Long = {
     wayTiles = m.step("way_membership") {
-      LinkMembership.linkTiles(ways, assignment, salted = true).localCheckpoint(true)
+      LinkMembership.linkTiles(ways, assignment).localCheckpoint(true)
     }
     val relEdges = relMembers.where(col("mtype") === lit("relation"))
       .select(col("rel_id").as("parent_id"), col("ref").as("child_id"))

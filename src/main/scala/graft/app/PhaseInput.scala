@@ -96,7 +96,7 @@ private[app] final class CorpusInput(spark: SparkSession, a: SplitterArgs)
               a.boundaryTags.getOrElse(RelevanceFilter.UseExcludeList),
               a.wantedAdminLevel.getOrElse(RelevanceFilter.DefaultWantedAdminLevel)))
           problems = LinkMembership.problemLinks(
-            LinkMembership.linkTiles(considered, assignment, salted = true))
+            LinkMembership.linkTiles(considered, assignment))
             .localCheckpoint(true)
           AreaWriters.writeProblemListKinds(path, problems, problems.limit(0))
       }

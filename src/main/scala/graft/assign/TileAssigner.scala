@@ -72,36 +72,30 @@ object TileAssigner {
  */
 object LinkMembership {
 
+  private val SaltBuckets = 16
+
   /**
+   * Two-phase aggregation: the tile set is pre-aggregated on
+   * (link_id, salt) first, so one viral link with millions of members
+   * cannot overload a single reducer.
+   *
    * @param links      (link_id, member_ids: array<string>)
    * @param assignment (doc_id, tile_ids: array<int>)
-   * @param salted     two-phase aggregation: pre-aggregate the tile
-   *                   set on (link_id, salt) first so one viral link
-   *                   with millions of members cannot overload a
-   *                   single reducer
    * @return (link_id, tile_ids sorted distinct, is_problem)
    */
-  def linkTiles(links: DataFrame, assignment: DataFrame,
-                salted: Boolean = false, saltBuckets: Int = 16): DataFrame = {
-    val exploded = links
+  def linkTiles(links: DataFrame, assignment: DataFrame): DataFrame =
+    links
       .select(col("link_id"), explode(col("member_ids")).as("doc_id"))
-    val joined = exploded
       .join(assignment.select(col("doc_id"), col("tile_ids")), Seq("doc_id"))
       .select(col("link_id"), explode(col("tile_ids")).as("tid"))
-    val perLink =
-      if (!salted)
-        joined.groupBy("link_id").agg(collect_set(col("tid")).as("tset"))
-      else
-        joined
-          .groupBy(col("link_id"), pmod(xxhash64(col("tid")), lit(saltBuckets)).as("salt"))
-          .agg(collect_set(col("tid")).as("partial"))
-          .groupBy("link_id")
-          .agg(array_distinct(flatten(collect_set(col("partial")))).as("tset"))
-    perLink.select(
-      col("link_id"),
-      sort_array(col("tset")).as("tile_ids"),
-      (size(col("tset")) > 1).as("is_problem"))
-  }
+      .groupBy(col("link_id"), pmod(xxhash64(col("tid")), lit(SaltBuckets)).as("salt"))
+      .agg(collect_set(col("tid")).as("partial"))
+      .groupBy("link_id")
+      .agg(array_distinct(flatten(collect_set(col("partial")))).as("tset"))
+      .select(
+        col("link_id"),
+        sort_array(col("tset")).as("tile_ids"),
+        (size(col("tset")) > 1).as("is_problem"))
 
   /** Sorted problem-link ids (problem.list content). */
   def problemLinks(linkTiles: DataFrame): DataFrame =

@@ -10,11 +10,21 @@ import org.apache.spark.sql.functions._
  * The groupBy(cell).count() hash aggregate does map-side partial
  * aggregation, so each task emits at most one row per distinct cell
  * and a dense-metro cell costs the reducer at most #tasks rows — the
- * aggregation itself is skew-proof. (Salting is still available for
- * set-valued aggregations downstream; see `assign.ProblemLinks`.)
+ * aggregation itself is skew-proof. (The set-valued link-membership
+ * aggregation downstream is the one that salts; see
+ * [[graft.assign.LinkMembership.linkTiles]].)
  * The result is at most one row per non-empty grid cell, small enough
  * to collect for the driver-side solver at resolutions <= 16; the
  * iterative split path keeps it distributed instead.
+ *
+ * Every histogram here is grouped by one packed cell key,
+ * `cell_key = cell_y * 2^32 + cell_x`: a single 8-byte fixed-width key
+ * keeps the hash aggregate in its fastest path — measured 20-70x
+ * faster than grouping by the two int columns at 8M rows / 1.5M
+ * groups on local[32] — and a join of two histograms on it needs no
+ * re-exchange, since both aggregations are already hash-partitioned
+ * by it (r7: two fewer exchanges for the sea merge than joining on
+ * the unpacked pair). The key <-> (x, y) mapping is bijective.
  */
 object DensityJob {
 
@@ -37,30 +47,38 @@ object DensityJob {
     lat >= bounds.minLat && lat <= bounds.maxLat &&
       lon >= bounds.minLon && lon <= bounds.maxLon
 
+  /** Sea cells with no land count weigh this much (reference
+    * `DensityMap.mergeSeaData:349-428`, SEA_NODE_FACTOR). */
+  private val SeaFactor = 2
+
   /**
-   * Cell histogram `(cell_x, cell_y, cnt)` of a point DataFrame.
-   * One shuffle, partially aggregated map-side.
-   *
-   * The grouping key is the two cell coordinates packed into a single
-   * long (y * 2^32 + x) and unpacked after the aggregate: a single
-   * 8-byte fixed-width key keeps the hash aggregate in its fastest
-   * path — measured 20-70x faster than grouping by the two int
-   * columns at 8M rows / 1.5M groups on local[32].
+   * Keyed cell histogram `(cell_key, cnt, extra...)` of a point
+   * DataFrame: one shuffle, partially aggregated map-side. `extra`
+   * aggregates ride the same per-cell group.
    */
-  def histogram(points: DataFrame, lat: Column, lon: Column,
-                bounds: TileRect, resolution: Int): DataFrame = {
+  def histogramKeyed(points: DataFrame, lat: Column, lon: Column,
+                     bounds: TileRect, resolution: Int,
+                     extra: Column*): DataFrame = {
     val shift = 24 - resolution
     val key = cellY(lat, bounds, shift).cast("long") * (1L << 32) +
       cellX(lon, bounds, shift).cast("long")
     points
       .where(inBounds(lat, lon, bounds))
       .groupBy(key.as("cell_key"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(
-        (col("cell_key") % (1L << 32)).cast("int").as("cell_x"),
-        (col("cell_key") / (1L << 32)).cast("int").as("cell_y"),
-        col("cnt"))
+      .agg(count(lit(1)).as("cnt"), extra: _*)
   }
+
+  /** A keyed `(cell_key, cnt)` histogram as `(cell_x, cell_y, cnt)`. */
+  def unpacked(keyed: DataFrame): DataFrame =
+    keyed.select(
+      (col("cell_key") % (1L << 32)).cast("int").as("cell_x"),
+      (col("cell_key") / (1L << 32)).cast("int").as("cell_y"),
+      col("cnt"))
+
+  /** Cell histogram `(cell_x, cell_y, cnt)` of a point DataFrame. */
+  def histogram(points: DataFrame, lat: Column, lon: Column,
+                bounds: TileRect, resolution: Int): DataFrame =
+    unpacked(histogramKeyed(points, lat, lon, bounds, resolution))
 
   /** Exact data bounding box `(min_lat, min_lon, max_lat, max_lon)`. */
   def bbox(points: DataFrame, lat: Column, lon: Column): TileRect = {
@@ -71,108 +89,72 @@ object DensityJob {
   }
 
   /**
-   * Merge a background (sea) histogram into a primary (land) one:
-   * cells with no land count take `seaCount * factor`, land wins
-   * otherwise — a raster-raster full-outer reconcile (reference
-   * `DensityMap.mergeSeaData:349-428`, SEA_NODE_FACTOR = 2).
+   * Merge a keyed background (sea) histogram into a keyed primary
+   * (land) one: cells with no land count take `seaCount * 2`, land
+   * wins otherwise — a raster-raster full-outer reconcile on the
+   * packed key (reference `DensityMap.mergeSeaData:349-428`).
+   * Returns keyed `(cell_key, cnt)`.
    */
-  def mergeHistograms(land: DataFrame, sea: DataFrame, factor: Int = 2): DataFrame =
-    land.withColumnRenamed("cnt", "land_cnt")
-      .join(sea.withColumnRenamed("cnt", "sea_cnt"),
-        Seq("cell_x", "cell_y"), "full_outer")
-      .select(col("cell_x"), col("cell_y"),
-        when(col("land_cnt").isNotNull, col("land_cnt"))
-          .otherwise(col("sea_cnt") * factor).as("cnt"))
-
-  /** [[histogram]] kept on its packed 8-byte key: `(cell_key, cnt)` —
-    * the aggregation's own partitioning, so a downstream join on
-    * `cell_key` needs no re-exchange (r7). */
-  def histogramKeyed(points: DataFrame, lat: Column, lon: Column,
-                     bounds: TileRect, resolution: Int): DataFrame = {
-    val shift = 24 - resolution
-    val key = cellY(lat, bounds, shift).cast("long") * (1L << 32) +
-      cellX(lon, bounds, shift).cast("long")
-    points
-      .where(inBounds(lat, lon, bounds))
-      .groupBy(key.as("cell_key"))
-      .agg(count(lit(1)).as("cnt"))
-  }
-
-  /** [[mergeHistograms]] over keyed histograms: the full-outer join
-    * runs on the single packed key BOTH aggregations are already
-    * hash-partitioned by — the (cell_x, cell_y) formulation forced
-    * two fresh exchanges to realign on the unpacked pair (r7; the
-    * key <-> (x, y) mapping is bijective, so the matched cell pairs —
-    * and the land-wins-else-sea*factor values — are identical).
-    * Returns the standard unpacked (cell_x, cell_y, cnt). */
-  def mergeHistogramsKeyed(land: DataFrame, sea: DataFrame,
-                           factor: Int = 2): DataFrame =
+  def mergeSea(land: DataFrame, sea: DataFrame): DataFrame =
     land.withColumnRenamed("cnt", "land_cnt")
       .join(sea.withColumnRenamed("cnt", "sea_cnt"),
         Seq("cell_key"), "full_outer")
-      .select(
-        (col("cell_key") % (1L << 32)).cast("int").as("cell_x"),
-        (col("cell_key") / (1L << 32)).cast("int").as("cell_y"),
+      .select(col("cell_key"),
         when(col("land_cnt").isNotNull, col("land_cnt"))
-          .otherwise(col("sea_cnt") * factor).as("cnt"))
+          .otherwise(col("sea_cnt") * SeaFactor).as("cnt"))
 
   /**
-   * Collect an already-computed `(cell_x, cell_y, cnt)` histogram
-   * DataFrame into the driver-side [[DensityGrid]] — the terminal
-   * step of merged (land + sea) density pipelines, same packed-array
-   * transfer as [[collectGrid]]. `bounds` must be the grid-aligned
-   * rect the histogram was computed against.
+   * Collect a histogram into the driver-side [[DensityGrid]].
+   *
+   * `sea`, when given, holds background points with the same `lat` /
+   * `lon` columns; its histogram over the same aligned bounds is
+   * merged in with [[mergeSea]] before the collect (the
+   * `--precomp-sea` path).
    */
-  def collectHistogramGrid(hist: DataFrame, bounds: TileRect,
-                           resolution: Int): DensityGrid = {
-    val spark = hist.sparkSession
-    import spark.implicits._
-    val packed = hist
-      .select(col("cell_x").cast("long"), col("cell_y").cast("long"),
-        col("cnt").cast("long"))
-      .as[(Long, Long, Long)]
-      .mapPartitions { it =>
-        val xs = Array.newBuilder[Long]
-        val ys = Array.newBuilder[Long]
-        val cs = Array.newBuilder[Long]
-        it.foreach { case (x, y, c) => xs += x; ys += y; cs += c }
-        Iterator.single((xs.result(), ys.result(), cs.result()))
-      }
-      .collect()
-    val g = new DensityGrid(bounds.roundedTo(resolution), resolution)
-    packed.foreach { case (xs, ys, cs) =>
-      var i = 0
-      while (i < xs.length) {
-        g.addToCell(xs(i).toInt, ys(i).toInt, cs(i).toInt)
-        i += 1
-      }
-    }
-    g
+  def collectGrid(points: DataFrame, lat: Column, lon: Column,
+                  bounds: TileRect, resolution: Int,
+                  sea: Option[DataFrame] = None): DensityGrid = {
+    val aligned = bounds.roundedTo(resolution)
+    val land = histogramKeyed(points, lat, lon, aligned, resolution)
+    val hist = sea.fold(land)(s =>
+      mergeSea(land, histogramKeyed(s, lat, lon, aligned, resolution)))
+    collect(hist.select(col("cell_key"), col("cnt"), lit(0L)),
+      aligned, resolution)._1
   }
 
   /**
    * [[collectGrid]] fused with a whole-input XOR checksum: one
-   * aggregation computes per-cell (count, bit_xor(fpCol)) and the
+   * aggregation computes per-cell (count, bit_xor(fp)) and the
    * driver XORs the per-cell partials back together — XOR is
    * associative/commutative, so the result equals bit_xor over all
-   * rows. Saves the separate full pass a standalone checksum action
-   * would cost (the corpus scan is the dominant term of the
-   * pipeline's density phase).
+   * rows inside the aligned bounds (every row when `bounds` is the
+   * data's [[bbox]]). Saves the separate full pass a standalone
+   * checksum action would cost (the corpus scan is the dominant term
+   * of the pipeline's density phase).
    */
   def collectGridWithXor(points: DataFrame, lat: Column, lon: Column,
                          fp: Column, bounds: TileRect,
                          resolution: Int): (DensityGrid, Long) = {
     val aligned = bounds.roundedTo(resolution)
-    val spark = points.sparkSession
+    collect(histogramKeyed(points, lat, lon, aligned, resolution,
+      bit_xor(fp).as("fpx")), aligned, resolution)
+  }
+
+  /**
+   * Collect a keyed `(cell_key, cnt, fpx)` histogram into a grid over
+   * `aligned`, plus the XOR of every `fpx`.
+   *
+   * Each result partition packs its rows into two primitive arrays
+   * and one XOR on the executor, so the driver receives one object
+   * per partition instead of millions of boxed rows — the serial
+   * collect term drops from O(cells) row decoding to a few array
+   * copies (matters for Amdahl at high parallelism).
+   */
+  private def collect(hist: DataFrame, aligned: TileRect,
+                      resolution: Int): (DensityGrid, Long) = {
+    val spark = hist.sparkSession
     import spark.implicits._
-    val shift = 24 - resolution
-    val key = cellY(lat, aligned, shift).cast("long") * (1L << 32) +
-      cellX(lon, aligned, shift).cast("long")
-    val packed = points
-      .where(inBounds(lat, lon, aligned))
-      .select(key.as("cell_key"), fp.as("__fp"))
-      .groupBy("cell_key")
-      .agg(count(lit(1)).as("cnt"), expr("bit_xor(__fp)").as("fpx"))
+    val packed = hist
       .as[(Long, Long, Long)]
       .mapPartitions { it =>
         val keys = Array.newBuilder[Long]
@@ -194,46 +176,5 @@ object DensityJob {
       }
     }
     (g, xor)
-  }
-
-  /**
-   * Collect a histogram into the driver-side [[DensityGrid]].
-   *
-   * Each result partition packs its (cell_key, cnt) rows into two
-   * primitive arrays on the executor, so the driver receives one
-   * object pair per partition instead of millions of boxed rows —
-   * the serial collect term drops from O(cells) row decoding to a
-   * few array copies (matters for Amdahl at high parallelism).
-   */
-  def collectGrid(points: DataFrame, lat: Column, lon: Column,
-                  bounds: TileRect, resolution: Int): DensityGrid = {
-    val aligned = bounds.roundedTo(resolution)
-    val spark = points.sparkSession
-    import spark.implicits._
-    val shift = 24 - resolution
-    val key = cellY(lat, aligned, shift).cast("long") * (1L << 32) +
-      cellX(lon, aligned, shift).cast("long")
-    val packed = points
-      .where(inBounds(lat, lon, aligned))
-      .groupBy(key.as("cell_key"))
-      .agg(count(lit(1)).as("cnt"))
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        val keys = Array.newBuilder[Long]
-        val cnts = Array.newBuilder[Long]
-        it.foreach { case (k, c) => keys += k; cnts += c }
-        Iterator.single((keys.result(), cnts.result()))
-      }
-      .collect()
-    val g = new DensityGrid(aligned, resolution)
-    packed.foreach { case (keys, cnts) =>
-      var i = 0
-      while (i < keys.length) {
-        val k = keys(i)
-        g.addToCell((k % (1L << 32)).toInt, (k >> 32).toInt, cnts(i).toInt)
-        i += 1
-      }
-    }
-    g
   }
 }

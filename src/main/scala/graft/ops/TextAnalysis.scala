@@ -70,13 +70,14 @@ object TextAnalysis {
     * (doc, gram) to compute a per-doc minimum, and min is insensitive
     * to the distinct. Values identical: same gram positions
     * (truncated gram included, like charShingles), same 60-bit md5
-    * key mod P. isNotNull reproduces the old null-text drop. */
+    * key mod P. A null-text doc keeps its row with a NULL
+    * fingerprint, as the old shingle path and the oracle's single
+    * NULL gram give it. */
   def fingerprint(docs: DataFrame, n: Int = 5,
                   id: String = "doc_id", text: String = "text"): DataFrame =
-    docs.where(col(text).isNotNull)
-      .select(col(id),
-        array_min(transform(
-          graft.functions.GramHashesExpr.gramHashes(
-            col(text), n, "md5", fullOnly = false),
-          h => h % TextDedup.P)).as("fingerprint"))
+    docs.select(col(id),
+      array_min(transform(
+        graft.functions.GramHashesExpr.gramHashes(
+          col(text), n, "md5", fullOnly = false),
+        h => h % TextDedup.P)).as("fingerprint"))
 }

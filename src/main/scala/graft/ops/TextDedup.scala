@@ -302,9 +302,13 @@ object TextDedup {
    * equal on randomized graphs).
    *
    * (r7) Hybrid tail: once the (shrinking) edge list fits
-   * `driverFinishEdges` (default 1M edges, ~16 MB packed on the
-   * driver — set 0 to force pure-distributed), a single union-find
-   * pass finishes the contraction on the driver. The tail rounds of
+   * `driverFinishEdges` (default 1M edges; set 0 to force
+   * pure-distributed), a single union-find pass finishes the
+   * contraction on the driver. Size the driver heap for more than the
+   * packed edge arrays (16 bytes an edge): [[unionFindLabels]] also
+   * builds a boxed `HashMap[Long, Long]` over every node, a buffer of
+   * boxed `(id, 0L)` tuples (two per edge) and the `.distinct` copy of
+   * its ids. The tail rounds of
    * star-contraction are pure latency — a few KB of edges dragged
    * through full shuffle DAGs once the big components have collapsed
    * (measured: round 0 took 368k -> 1.7k edges, then three more

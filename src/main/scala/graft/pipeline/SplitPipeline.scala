@@ -19,23 +19,16 @@ import java.nio.file.{Files, Paths}
 final case class SplitConfig(
     resolution: Int = 13,
     maxNodes: Long = 1600000L,
+    /** Map units, used as given: the keep-complete default is
+      * resolved once, by `SplitterArgs.overlapAmount`. */
     overlap: Int = 0,
     keepComplete: Boolean = true,
     startMapId: Int = 63240001,
     trim: Boolean = true,
-    /** Replicate the reference's TOP-side trim bound slip for
-      * byte-parity with real splitter areas.list goldens
-      * (`Solution.java:242-243`). */
-    bugCompatTrim: Boolean = false,
     searchLimit: Int = BspSolver.DefaultSearchLimit,
     nearestFallback: Boolean = true,
     numTiles: Option[Int] = None,
-    bounds: Option[TileRect] = None) {
-  /** keep-complete=false defaults overlap to 2000 map units
-    * (reference `Main.java:432-449`). */
-  def effectiveOverlap: Int =
-    if (!keepComplete && overlap == 0) 2000 else overlap
-}
+    bounds: Option[TileRect] = None)
 
 final case class SplitResult(areas: Seq[AreaDef], grid: DensityGrid,
                              assigned: DataFrame)
@@ -65,38 +58,21 @@ object SplitPipeline {
       .withColumn("lon_mu", CoordSynthesis.lonCol(id))
   }
 
-  def computeGrid(points: DataFrame, cfg: SplitConfig): DensityGrid = {
+  /** Density grid of `points`; `sea` (columns lat_mu, lon_mu), when
+    * given, is merged in as the `--precomp-sea` background — see
+    * [[DensityJob.collectGrid]]. */
+  def computeGrid(points: DataFrame, cfg: SplitConfig,
+                  sea: Option[DataFrame] = None): DensityGrid = {
     val bounds = cfg.bounds.getOrElse(
       DensityJob.bbox(points, col("lat_mu"), col("lon_mu")))
     DensityJob.collectGrid(points, col("lat_mu"), col("lon_mu"),
-      bounds, cfg.resolution)
-  }
-
-  /**
-   * Grid with a precompiled-sea background merged in (the
-   * `--precomp-sea` path): land and sea histograms over the SAME
-   * aligned bounds, reconciled with the reference's empty-land-takes-
-   * sea*2 rule (`DensityMap.mergeSeaData:349-428`) as a full-outer
-   * raster join, then collected. `seaPoints` columns: lat_mu, lon_mu.
-   */
-  def computeGridWithSea(points: DataFrame, seaPoints: DataFrame,
-                         cfg: SplitConfig): DensityGrid = {
-    val bounds = cfg.bounds.getOrElse(
-      DensityJob.bbox(points, col("lat_mu"), col("lon_mu")))
-    val aligned = bounds.roundedTo(cfg.resolution)
-    val land = DensityJob.histogram(points, col("lat_mu"), col("lon_mu"),
-      aligned, cfg.resolution)
-    val sea = DensityJob.histogram(seaPoints, col("lat_mu"), col("lon_mu"),
-      aligned, cfg.resolution)
-    DensityJob.collectHistogramGrid(
-      DensityJob.mergeHistograms(land, sea), aligned, cfg.resolution)
+      bounds, cfg.resolution, sea)
   }
 
   def solve(grid: DensityGrid, cfg: SplitConfig): Seq[AreaDef] = {
     val solver = new BspSolver(grid, cfg.searchLimit)
     solver.maxNodes = cfg.maxNodes
     solver.trimShape = cfg.trim
-    solver.bugCompatTrim = cfg.bugCompatTrim
     val rects = cfg.numTiles match {
       case Some(n) => solver.splitIntoTiles(n)
       case None => solver.split()
@@ -105,7 +81,7 @@ object SplitPipeline {
   }
 
   def buildIndex(areas: Seq[AreaDef], cfg: SplitConfig): TileIndex =
-    new TileIndex(areas.map(_.rect).toArray, cfg.effectiveOverlap)
+    new TileIndex(areas.map(_.rect).toArray, cfg.overlap)
 
   def assign(spark: SparkSession, points: DataFrame, areas: Seq[AreaDef],
              cfg: SplitConfig): DataFrame = {

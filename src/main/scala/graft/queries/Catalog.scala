@@ -116,10 +116,9 @@ object Catalog {
 
     "q_density_merge" -> ((s, dir) => {
       // A4 raster-raster reconcile: document density as land, event
-      // density as the sea/background raster. (r7) keyed variant: the
-      // full-outer reconcile joins on the packed cell key both
-      // aggregations already partition by (2 fewer exchanges; same
-      // cells, same counts — see DensityJob.mergeHistogramsKeyed)
+      // density as the sea/background raster, joined on the packed
+      // cell key both aggregations already partition by (r7: 2 fewer
+      // exchanges; see DensityJob.mergeSea)
       val land = DensityJob.histogramKeyed(points(s, dir),
         col("lat_mu"), col("lon_mu"), gb, FixedTiles.Resolution)
       val ev = s.read.parquet(s"$dir/events.parquet").select(
@@ -127,7 +126,7 @@ object Catalog {
         CoordSynthesis.lonCol(col("event_id")).cast("long").as("lon_mu"))
       val sea = DensityJob.histogramKeyed(ev,
         col("lat_mu"), col("lon_mu"), gb, FixedTiles.Resolution)
-      DensityJob.mergeHistogramsKeyed(land, sea)
+      DensityJob.unpacked(DensityJob.mergeSea(land, sea))
         .select(col("cell_x").cast("long").as("cell_x"),
           col("cell_y").cast("long").as("cell_y"), col("cnt"))
     }),
@@ -148,7 +147,7 @@ object Catalog {
       val links = p.select(graft.model.LinkModel.linkIdCol().as("link_id")).distinct()
         .select(col("link_id"),
           graft.model.LinkModel.memberIdsCol(col("link_id")).as("member_ids"))
-      LinkMembership.linkTiles(links, assignment, salted = true)
+      LinkMembership.linkTiles(links, assignment)
         .select(col("link_id"),
           size(col("tile_ids")).cast("long").as("n_tiles"),
           (element_at(col("tile_ids"), 1) + FixedTiles.StartMapId).cast("long").as("min_tile"),
@@ -173,7 +172,7 @@ object Catalog {
           graft.assign.RelevanceFilter.adminLevelCol(col("link_id"))))
         .select(col("link_id"),
           graft.model.LinkModel.memberIdsCol(col("link_id")).as("member_ids"))
-      LinkMembership.linkTiles(links, assignment, salted = true)
+      LinkMembership.linkTiles(links, assignment)
         .select(col("link_id"),
           size(col("tile_ids")).cast("long").as("n_tiles"),
           col("is_problem"))

@@ -320,10 +320,11 @@ object OpsCatalog {
     // to compute a per-doc statistic — collapses to ZERO exchanges
     // (guide §2.4). Same gram set (truncated gram for short texts
     // included) and exact distinct over gram TEXT, so counts match
-    // the oracle's distinct-substr aggregation bit for bit; isNotNull
-    // reproduces the old inner join's null-text drop.
+    // the oracle's distinct-substr aggregation bit for bit. A null-text
+    // doc keeps its row: greatest() skips the NULL length, so it has
+    // one NULL gram and rep_ppm 0, as in the oracle.
     "q_repetition" -> ((s, dir) =>
-      docs(s, dir).where(col("text").isNotNull)
+      docs(s, dir)
         .select(col("doc_id"),
           greatest(length(col("text")) - 2, lit(1)).cast("long").as("n_total"),
           size(array_distinct(transform(

@@ -19,7 +19,7 @@ import java.util.zip.GZIPInputStream
  * normal Spark reader — same index/classification/enumeration
  * semantics, Spark-native payload. Pure sea/land entries classify
  * only (they carry no nodes); the downstream merge is
- * [[graft.density.DensityJob.mergeHistograms]] (empty land cells take
+ * [[graft.density.DensityJob.mergeSea]] (empty land cells take
  * seaCount * 2, reference `DensityMap.mergeSeaData:349-428`).
  */
 object PrecompSea {

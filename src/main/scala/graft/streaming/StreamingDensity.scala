@@ -21,17 +21,11 @@ import org.apache.spark.sql.functions._
  */
 object StreamingDensity {
 
-  /** Running (cell_x, cell_y, cnt) totals over a point stream. */
+  /** Running (cell_x, cell_y, cnt) totals over a point stream: the
+    * batch [[DensityJob.histogram]], kept as streaming state. */
   def cellCounts(stream: DataFrame, lat: Column, lon: Column,
-                 bounds: TileRect, resolution: Int): DataFrame = {
-    val shift = 24 - resolution
-    stream
-      .where(DensityJob.inBounds(lat, lon, bounds))
-      .groupBy(
-        DensityJob.cellX(lon, bounds, shift).as("cell_x"),
-        DensityJob.cellY(lat, bounds, shift).as("cell_y"))
-      .agg(count(lit(1)).as("cnt"))
-  }
+                 bounds: TileRect, resolution: Int): DataFrame =
+    DensityJob.histogram(stream, lat, lon, bounds, resolution)
 
   /** Per-event-time-window cell counts with a watermark: closed
     * windows emit once (append mode) and can be merged downstream. */

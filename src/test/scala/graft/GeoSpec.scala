@@ -48,11 +48,13 @@ class GeoSpec extends AnyFunSuite {
   }
 
   test("overlap defaults follow keep-complete mode (reference Main.java:432-449)") {
-    import graft.pipeline.SplitConfig
-    assert(SplitConfig(keepComplete = true).effectiveOverlap === 0)
-    assert(SplitConfig(keepComplete = false).effectiveOverlap === 2000)
-    assert(SplitConfig(keepComplete = false, overlap = 500).effectiveOverlap === 500)
-    assert(SplitConfig(keepComplete = true, overlap = 500).effectiveOverlap === 500)
+    import graft.app.SplitterArgs
+    def overlap(args: String*): Int =
+      SplitterArgs.parse(args :+ "x").toOption.get.toConfig.overlap
+    assert(overlap("--keep-complete=true") === 0)
+    assert(overlap("--keep-complete=false") === 2000)
+    assert(overlap("--keep-complete=false", "--overlap=500") === 500)
+    assert(overlap("--keep-complete=true", "--overlap=500") === 500)
   }
 
   test("coordinate synthesis stays in window and is deterministic") {

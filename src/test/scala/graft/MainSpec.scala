@@ -34,6 +34,15 @@ class MainSpec extends AnyFunSuite {
     val b = SplitterArgs.parse(
       Seq("--keep-complete=false", "--overlap=500", "x")).toOption.get
     assert(b.overlapAmount === 500)
+    // the tile index carries the resolved overlap as is: the default
+    // applies once, so an explicit 0 stays 0 with keep-complete off
+    val areas = Seq(graft.output.AreaDef(1, graft.geo.TileRect(0, 0, 4096, 4096)))
+    def indexed(args: String*): Int = graft.pipeline.SplitPipeline.buildIndex(
+      areas, SplitterArgs.parse(args :+ "x").toOption.get.toConfig).overlap
+    assert(indexed() === 0)
+    assert(indexed("--keep-complete=false") === 2000)
+    assert(indexed("--keep-complete=false", "--overlap=500") === 500)
+    assert(indexed("--keep-complete=false", "--overlap=0") === 0)
   }
 
   test("validation rejects what the reference rejects") {

@@ -88,8 +88,15 @@ class OpsSpec extends AnyFunSuite {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("link_id", "tile_ids", "is_problem")
         .collect().map(r => (r.getLong(0), r.getSeq[Int](1), r.getBoolean(2))).toSet
-    val plain = canon(LinkMembership.linkTiles(links, assignment, salted = false))
-    val salted = canon(LinkMembership.linkTiles(links, assignment, salted = true))
+    // the unsalted reference: one collect_set per link
+    val plain = canon(links
+      .select(col("link_id"), explode(col("member_ids")).as("doc_id"))
+      .join(assignment, Seq("doc_id"))
+      .select(col("link_id"), explode(col("tile_ids")).as("tid"))
+      .groupBy("link_id").agg(collect_set(col("tid")).as("tset"))
+      .select(col("link_id"), sort_array(col("tset")).as("tile_ids"),
+        (size(col("tset")) > 1).as("is_problem")))
+    val salted = canon(LinkMembership.linkTiles(links, assignment))
     assert(plain === salted)
   }
 
@@ -336,6 +343,41 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(starsDist === jump,
       s"pure-distributed star labels diverge: ${starsDist.toSet.diff(jump.toSet).take(5)}")
+  }
+
+  test("star CC with a small driver bound finishes a contracted edge list on the driver") {
+    // 8 raw pairs and 6 canonical edges (one reversed duplicate, one
+    // self-pair) exceed the bound of 5, so the raw fast path is skipped
+    // and contraction starts; the converged stars hold 4 edges (6 nodes,
+    // 2 components), so contraction can only stop below the bound
+    // before it has converged, and union-find labels that edge list
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (4L, 2L),
+      (11L, 10L), (10L, 11L), (20L, 20L)).toDF("id_a", "id_b")
+    val jump = TextDedup.connectedComponents(pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val stars = TextDedup.connectedComponentsStars(pairs, driverFinishEdges = 5)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(jump === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L, 20L -> 20L))
+    assert(stars === jump)
+  }
+
+  test("fingerprint and repetition keep a null-text doc, as the oracle does") {
+    // the oracle's gram table gives a null text one NULL gram
+    // (GREATEST skips the NULL length): fingerprint NULL, rep_ppm 0
+    val dir = java.nio.file.Files.createTempDirectory("graft_nulltext").toString
+    docs.limit(3)
+      .unionByName(docs.limit(1).withColumn("doc_id", lit(-1L))
+        .withColumn("text", lit(null).cast("string")))
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    def rows(q: String) = graft.queries.OpsCatalog.queries(q)(spark, dir)
+      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    val fp = rows("q_fingerprint")
+    val rep = rows("q_repetition")
+    assert(fp.size === 4 && rep.size === 4, "every doc keeps its row")
+    assert(fp(-1L) === None)
+    assert(rep(-1L) === Some(0L))
+    assert((fp - -1L).values.forall(_.isDefined))
   }
 
   test("nearest_index kernel equals the struct-array argmax formulation") {

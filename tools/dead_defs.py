@@ -1,13 +1,20 @@
 #!/usr/bin/env python3
-"""List `def`s under src/main/scala that nothing calls.
+"""List `def`s under src/main/scala that nothing calls, and stale links.
 
 A def counts as called when its name appears anywhere in src/,
 perfbench/src or tools/ other than on the lines that define it
 (a Scaladoc link counts too). Overrides are skipped, and so are the
 callbacks in ALLOWED that the JVM or Spark calls by name.
 
+A Scaladoc link `[[...]]` under src/main/scala is stale when its final
+name is no def, val, var, class, object, trait, type or package
+declared anywhere in those roots. Links qualified outside `graft.`
+point at other libraries and are not checked. A stale link compiles
+silently, so a deleted or renamed name would otherwise stay linked.
+
 Usage: python3 tools/dead_defs.py   (from the repository root)
-Prints one `path:line: def name` per finding and exits 1 if any.
+Prints one `path:line: def name` or `path:line: link [[target]]` per
+finding and exits 1 if any.
 """
 import collections
 import os
@@ -34,6 +41,9 @@ ALLOWED = {
 
 IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 DEF = re.compile(r"\bdef\s+([A-Za-z_][A-Za-z0-9_]*)")
+DECL = re.compile(r"\b(?:def|val|var|class|object|trait|type)\s+([A-Za-z_][A-Za-z0-9_]*)")
+PACKAGE = re.compile(r"^\s*package\s+([A-Za-z_][A-Za-z0-9_.]*)", re.M)
+LINK = re.compile(r"\[\[([^\]\s]+)[^\]]*\]\]")
 
 
 def source_files(root):
@@ -51,18 +61,33 @@ def read_text(path):
         return None  # binary data, e.g. parquet fixtures
 
 
+def link_name(target):
+    """Final name a link resolves by, or None for another library's."""
+    parts = re.split(r"[.#]", target.rstrip("()$!"))
+    if len(parts) > 1 and parts[0] != "graft":
+        return None
+    return parts[-1]
+
+
 def main():
     uses = collections.Counter()
     defs = collections.defaultdict(list)  # name -> [(path, line)]
+    declared = set()
+    links = []  # (path, line, target)
     for root in SCAN_ROOTS:
         for path in source_files(root):
             text = read_text(path)
             if text is None:
                 continue
             uses.update(IDENT.findall(text))
+            if path.endswith(".scala"):
+                declared.update(DECL.findall(text))
+                for pkg in PACKAGE.findall(text):
+                    declared.update(pkg.split("."))
             if not (path.startswith(DEF_ROOT + os.sep) and path.endswith(".scala")):
                 continue
             for n, line in enumerate(text.splitlines(), 1):
+                links.extend((path, n, m.group(1)) for m in LINK.finditer(line))
                 for m in DEF.finditer(line):
                     name = m.group(1)
                     allowed = ALLOWED[None] | ALLOWED.get(path.replace(os.sep, "/"), set())
@@ -71,9 +96,13 @@ def main():
                     defs[name].append((path, n))
     dead = sorted((path, n, name) for name, sites in defs.items()
                   if uses[name] <= len(sites) for path, n in sites)
+    stale = [(path, n, target) for path, n, target in links
+             if link_name(target) not in declared and link_name(target) is not None]
     for path, n, name in dead:
         print(f"{path}:{n}: def {name}")
-    return 1 if dead else 0
+    for path, n, target in stale:
+        print(f"{path}:{n}: link [[{target}]]")
+    return 1 if dead or stale else 0
 
 
 if __name__ == "__main__":
