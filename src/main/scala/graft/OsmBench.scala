@@ -136,9 +136,8 @@ object OsmBench {
 
     // ---- setup (untimed): write the three input layouts ----
     // planet.o5m carries periodic reset markers (resetEvery = 4 MiB) so
-    // the SINGLE file byte-range-splits like the pbf — the layout the
-    // engine's tile sink can opt into via o5mResetEvery (its default 0
-    // keeps reference byte parity)
+    // the SINGLE file byte-range-splits like the pbf (the engine's tile
+    // sink writes none, keeping byte parity with the reference writer)
     val pbfBytes = writeAll(s"$dir/planet.pbf", entities(nNodes))
     val o5mBytes = writeAll(s"$dir/planet.o5m", entities(nNodes),
       o5mResetEvery = 4L << 20)

@@ -223,7 +223,7 @@ object Main {
     // the pass count is a resource knob and MUST NOT change results
     // (the reference's SolverAndProblemGeneratorTest asserts this
     // invariance; MainSpec does the same here)
-    val rows = input.distRows(assignment, m)
+    val rows = input.distRows(assignment, areas, m)
     val chunks = areas.grouped(a.maxAreas).toSeq
     m.step("tile_sink") {
       val written = chunks.zipWithIndex.flatMap { case (chunk, i) =>

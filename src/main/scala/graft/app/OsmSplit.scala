@@ -1,6 +1,6 @@
 package graft.app
 
-import graft.assign.{LinkMembership, ProblemJoins}
+import graft.assign.{LinkMembership, ProblemJoins, TileAssigner}
 import graft.output.{AreaDef, AreaWriters, MetricsLog, OsmTileSink}
 import graft.sources.OsmFileSource
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -148,11 +148,11 @@ private[app] final class OsmInput(spark: SparkSession, a: SplitterArgs)
         explode(col("tile_ids")).as("tid"))
     wayPairs.unionByName(relPairs)
       .select(col("kind"), col("link_id"),
-        (col("tid") + a.mapid).cast("long").as("map_id"))
+        TileAssigner.mapIdAt(areas.map(_.mapId.toLong), col("tid")).as("map_id"))
   }
 
   // per-kind (kind, id, map_id) assignments
-  def distRows(assignment: DataFrame, m: MetricsLog): DataFrame = {
+  def distRows(assignment: DataFrame, areas: Seq[AreaDef], m: MetricsLog): DataFrame = {
     val nodeBase = assignment
       .select(col("doc_id").as("id"), explode(col("tile_ids")).as("tid"))
     val wayAssign = wayTiles
@@ -200,7 +200,8 @@ private[app] final class OsmInput(spark: SparkSession, a: SplitterArgs)
     val pairs = nodeBase.unionByName(nodeExtra).withColumn("kind", lit("node"))
       .unionByName(wayAll.withColumn("kind", lit("way")))
       .unionByName(relAssign.withColumn("kind", lit("relation")))
-      .select(col("kind"), col("id"), (col("tid") + a.mapid).as("map_id"))
+      .select(col("kind"), col("id"),
+        TileAssigner.mapIdAt(areas.map(_.mapId.toLong), col("tid")).cast("int").as("map_id"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     m.step("assign_pairs")(pairs.count()) // materialize once, timed apart

@@ -20,8 +20,9 @@ private[app] trait PhaseInput {
   def writeProblemList(assignment: DataFrame, path: String, m: MetricsLog): Long
   /** The problem links' (…, map_id) rows for link_tiles.parquet. */
   def problemTiles(areas: Seq[AreaDef]): DataFrame
-  /** The (…, map_id) rows the tiles are written from, and their phase name. */
-  def distRows(assignment: DataFrame, m: MetricsLog): DataFrame
+  /** The (…, map_id) rows the tiles are written from, and their phase
+    * name. Tile ids map to `areas`' own map ids. */
+  def distRows(assignment: DataFrame, areas: Seq[AreaDef], m: MetricsLog): DataFrame
   def distPhase: String
   /** Writes one pass of tiles; the rows written when the sink counts them. */
   def writeTiles(rows: DataFrame, pass: TilePass): Option[Long]
@@ -76,10 +77,12 @@ private[app] final class CorpusInput(spark: SparkSession, a: SplitterArgs)
         case Some(pf) =>
           import spark.implicits._
           val (ways, rels) = AreaWriters.readProblemList(pf)
+          // way and rel lines round-trip as they came; the corpus has
+          // one link namespace, so both kinds join the same frame
           val allIds = ways ++ rels
           // non-numeric ids can name links no corpus doc carries; they
           // round-trip through problem.list but join nothing
-          AreaWriters.writeProblemList(path, allIds, Nil)
+          AreaWriters.writeProblemList(path, ways, rels)
           problems = allIds.flatMap(p => scala.util.Try(p.toLong).toOption)
             .toDF("link_id").localCheckpoint(true)
           // the count is what problem.list holds, non-numeric ids too
@@ -125,8 +128,8 @@ private[app] final class CorpusInput(spark: SparkSession, a: SplitterArgs)
       areas.map(_.rect), areas.map(_.mapId.toLong))
   }
 
-  def distRows(assignment: DataFrame, m: MetricsLog): DataFrame =
-    TileAssigner.explodeByTile(assignment, a.mapid)
+  def distRows(assignment: DataFrame, areas: Seq[AreaDef], m: MetricsLog): DataFrame =
+    TileAssigner.explodeByTile(assignment, areas.map(_.mapId.toLong))
 
   val distPhase = "dist"
 

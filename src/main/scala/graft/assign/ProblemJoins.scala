@@ -39,11 +39,6 @@ object ProblemJoins {
                          tileRects: Seq[TileRect]): Broadcast[TileIndex] =
     df.sparkSession.sparkContext.broadcast(new TileIndex(tileRects.toArray, 0))
 
-  /** Tile position -> map id, as a literal lookup (1-based
-    * element_at; positions come from the probe, always in range). */
-  private def mapIdAt(mapIds: Seq[Long], pos: Column): Column =
-    element_at(array(mapIds.map(lit): _*), pos + 1)
-
   /** Per-link bounding box from member point coordinates:
     * (link_id, min_lat, min_lon, max_lat, max_lon). */
   def linkBboxes(members: DataFrame): DataFrame =
@@ -65,7 +60,7 @@ object ProblemJoins {
           col("min_lat").cast("int"), col("min_lon").cast("int"),
           col("max_lat").cast("int"), col("max_lon").cast("int"), bc))
           .as("tpos"))
-      .select(col("link_id"), mapIdAt(mapIds, col("tpos")).as("map_id"))
+      .select(col("link_id"), TileAssigner.mapIdAt(mapIds, col("tpos")).as("map_id"))
 
   /**
    * Closed-rect x segment intersection, exact in integers:
@@ -107,7 +102,7 @@ object ProblemJoins {
         explode(ProbeRectExpr.probeSegmentTiles(
           col("x1").cast("int"), col("y1").cast("int"),
           col("x2").cast("int"), col("y2").cast("int"), bc)).as("tpos"))
-      .select(col("link_id"), mapIdAt(mapIds, col("tpos")).as("map_id"))
+      .select(col("link_id"), TileAssigner.mapIdAt(mapIds, col("tpos")).as("map_id"))
       .distinct()
 
   /**
@@ -205,7 +200,7 @@ object ProblemJoins {
           col("lat_mu").cast("int"), col("lon_mu").cast("int"), bc,
           nearestFallback = false)).as("tpos"))
       .select(col("link_id"), col("doc_id"),
-        mapIdAt(mapIds, col("tpos")).as("map_id"))
+        TileAssigner.mapIdAt(mapIds, col("tpos")).as("map_id"))
 
   /** Links whose segment join can be elided (O6): every member point
     * matched at least one tile AND the matched tile set is a

@@ -39,6 +39,21 @@ object TileAssigner {
       .withColumn("map_id", col("tid") + startMapId)
       .drop("tile_ids", "tid")
 
+  /** [[explodeByTile]] with each tile id looked up in `mapIds` (the
+    * areas' ids in tile order, see [[mapIdAt]]); `map_id` stays int. */
+  def explodeByTile(df: DataFrame, mapIds: Seq[Long]): DataFrame =
+    df.withColumn("tid", explode(col("tile_ids")))
+      .withColumn("map_id", mapIdAt(mapIds, col("tid")).cast("int"))
+      .drop("tile_ids", "tid")
+
+  /** Tile id (a position in the probed areas) -> that area's map id,
+    * as a bigint literal lookup (1-based element_at; positions come
+    * from the probe, always in range). Areas read from a split file
+    * keep the ids they were written with, so an id is not
+    * `--mapid` + position in general. */
+  def mapIdAt(mapIds: Seq[Long], pos: Column): Column =
+    element_at(array(mapIds.map(lit): _*), pos + 1)
+
   /** Element-version output policy (reference
     * `writer/AbstractOSMWriter.java:28-62`): keep the column, fake it
     * to a constant, or remove it. */

@@ -23,6 +23,12 @@ import org.apache.spark.sql.types._
  * engine's embedding tables are dense, and OpsSpec + the oracle gate
  * the dense case at all SFs).
  *
+ * One divergence from that form: NaN scores. The strict `acc >
+ * bestScore` test means a NaN score (e.g. Inf * 0 from unnormalized
+ * data) never wins, so the best finite row is returned, and when
+ * every score is NaN the result is index 0. The struct max ordered
+ * NaN above every double and picked the NaN row instead.
+ *
  * WHY (r7): inlining k x len dot products as expression trees made
  * the enclosing whole-stage-codegen method exceed the JVM's JIT
  * limit (`Generated method too long to be JIT compiled: ... 34219

@@ -51,9 +51,9 @@ object OsmTileSink {
   private def deg7(mu: Int): Long = (MapUnits.toDegrees(mu) * 1e7).toLong
 
   private def open(out: OutputStream, format: String, rect: graft.geo.TileRect,
-      versionPolicy: String, o5mResetEvery: Long = 0L): EntitySink = format match {
+      versionPolicy: String): EntitySink = format match {
     case "o5m" =>
-      val w = new O5mWriter(out, versionPolicy, resetEvery = o5mResetEvery)
+      val w = new O5mWriter(out, versionPolicy)
       w.writeBounds(OsmBounds(deg7(rect.minLat), deg7(rect.minLon),
         deg7(rect.maxLat), deg7(rect.maxLon)))
       new EntitySink {
@@ -116,15 +116,10 @@ object OsmTileSink {
    * caller's --max-areas chunk): bounds lookup and empty-tile backfill
    * both scope to it.
    *
-   * `o5mResetEvery` > 0 makes o5m tiles carry the sync-marked reset
-   * datasets that let this engine's own source byte-range-split them;
-   * the default 0 keeps byte parity with the reference writer.
-   *
    * @return number of entity rows written across all tiles
    */
   def write(assigned: DataFrame, outDir: String, format: String,
-      areas: Seq[AreaDef], versionPolicy: String = "keep",
-      o5mResetEvery: Long = 0L): Long = {
+      areas: Seq[AreaDef], versionPolicy: String = "keep"): Long = {
     val spark = assigned.sparkSession
     val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     val rects: Map[Int, graft.geo.TileRect] = areas.map(a => a.mapId -> a.rect).toMap
@@ -178,7 +173,7 @@ object OsmTileSink {
           val tmp = new Path(outDir, f"_tmp_$mapId%08d.$ext.$attempt")
           temps += ((tmp, new Path(outDir, f"$mapId%08d.$ext")))
           sink = open(new BufferedOutputStream(fs.create(tmp, true), 1 << 16),
-            format, rect, versionPolicy, o5mResetEvery)
+            format, rect, versionPolicy)
           cur = mapId
         }
         sink.write(entityOf(r))
@@ -208,7 +203,7 @@ object OsmTileSink {
       if (!fs.exists(f)) {
         val tmp = new Path(outDir, f"_tmp_${a.mapId}%08d.$ext.backfill")
         val sink = open(new BufferedOutputStream(fs.create(tmp, true), 1 << 16),
-          format, a.rect, versionPolicy, o5mResetEvery)
+          format, a.rect, versionPolicy)
         sink.finish()
         if (!fs.rename(tmp, f)) {
           if (!fs.exists(f))

@@ -90,7 +90,7 @@ object Catalog {
 
     // A2+A3: per-tile column marginals -> running sum -> weighted
     // median split position, fully as a dataflow (the distributed
-    // analog of the solver's findHorizontalMiddle, and one round of
+    // analog of the solver's GridTile.findMiddle, and one round of
     // the IterativeSplitter expressed declaratively)
     "q_split_position" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window

@@ -1,5 +1,7 @@
 package graft.solver
 
+import graft.solver.BspSolver.{AxisHor, AxisVert}
+
 import scala.collection.mutable.ArrayBuffer
 
 /**
@@ -97,75 +99,54 @@ final class BspSolution(val maxNodes: Long) {
     if (tileBuf.isEmpty) return
     // mutable boxes; counts are unchanged because only empty rows/cols go
     final class Box(val t: GridTile) {
-      var x: Int = t.x; var y: Int = t.y
-      var w: Int = t.width; var h: Int = t.height
-      def maxX: Int = x + w
-      def maxY: Int = y + h
-      def view: GridTile = new GridTile(t.g, x, y, w, h, t.count)
+      val lo: Array[Int] = Array(t.x, t.y)
+      val len: Array[Int] = Array(t.width, t.height)
+      def hi(axis: Int): Int = lo(axis) + len(axis)
+      def view: GridTile =
+        new GridTile(t.g, lo(AxisHor), lo(AxisVert), len(AxisHor), len(AxisVert), t.count)
     }
     val boxes = tileBuf.map(new Box(_))
     var trimmedAny = true
     while (trimmedAny) {
       trimmedAny = false
-      val minX = boxes.map(_.x).min
-      val minY = boxes.map(_.y).min
-      val maxX = boxes.map(_.maxX).max
-      val maxY = boxes.map(_.maxY).max
-      // side: 0=left 1=right 2=bottom 3=top, scanned in both directions
-      var side = 0
-      while (side < 4) {
-        var direction = -1
-        while (direction <= 1) {
-          var bound = if (side == 0 || side == 2) Int.MaxValue else -1
-          var go = true
-          while (go) {
-            // pick the extreme tile on this side, ordered by direction
-            var cand: Box = null
-            boxes.foreach { b =>
-              if (b.t.count != 0) {
-                val onEdge = side match {
-                  case 0 => b.x == minX
-                  case 1 => b.maxX == maxX
-                  case 2 => b.y == minY
-                  case _ => b.maxY == maxY
-                }
-                if (onEdge) {
-                  if (cand == null) cand = b
-                  else side match {
-                    case 0 | 1 =>
-                      if (direction < 0 && cand.y > b.y) cand = b
-                      else if (direction > 0 && cand.maxY < b.maxY) cand = b
-                    case _ =>
-                      if (direction < 0 && cand.x > b.x) cand = b
-                      else if (direction > 0 && cand.maxX < b.maxX) cand = b
-                  }
-                }
-              }
-            }
-            if (cand == null) go = false
-            else {
-              val before = (cand.x, cand.y, cand.w, cand.h)
-              side match {
-                case 0 =>
-                  while (cand.x < bound && cand.view.colSum(0) == 0) { cand.x += 1; cand.w -= 1 }
-                  if (cand.x < bound) bound = cand.x
-                case 1 =>
-                  while (cand.maxX > bound && cand.view.colSum(cand.w - 1) == 0) cand.w -= 1
-                  if (cand.maxX > bound) bound = cand.maxX
-                case 2 =>
-                  while (cand.y < bound && cand.view.rowSum(0) == 0) { cand.y += 1; cand.h -= 1 }
-                  if (cand.y < bound) bound = cand.y
-                case _ =>
-                  while (cand.maxY > bound && cand.view.rowSum(cand.h - 1) == 0) cand.h -= 1
-                  if ((if (bugCompat) cand.maxX else cand.maxY) > bound) bound = cand.maxY
-              }
-              if (before == ((cand.x, cand.y, cand.w, cand.h))) go = false
-              else trimmedAny = true
+      val minLo = Array(AxisHor, AxisVert).map(axis => boxes.map(_.lo(axis)).min)
+      val maxHi = Array(AxisHor, AxisVert).map(axis => boxes.map(_.hi(axis)).max)
+      // sides left, right, bottom, top (low and high end of each axis),
+      // each scanned in both directions
+      for (axis <- Seq(AxisHor, AxisVert); high <- Seq(false, true); direction <- Seq(-1, 1)) {
+        val across = BspSolver.otherAxis(axis)
+        var bound = if (high) -1 else Int.MaxValue
+        var go = true
+        while (go) {
+          // pick the extreme tile on this side, ordered by direction
+          var cand: Box = null
+          boxes.foreach { b =>
+            if (b.t.count != 0 &&
+              (if (high) b.hi(axis) == maxHi(axis) else b.lo(axis) == minLo(axis))) {
+              if (cand == null) cand = b
+              else if (direction < 0 && cand.lo(across) > b.lo(across)) cand = b
+              else if (direction > 0 && cand.hi(across) < b.hi(across)) cand = b
             }
           }
-          direction += 2
+          if (cand == null) go = false
+          else {
+            val before = (cand.lo(axis), cand.len(axis))
+            if (high) {
+              while (cand.hi(axis) > bound && cand.view.lineSum(axis, cand.len(axis) - 1) == 0)
+                cand.len(axis) -= 1
+              // the bugCompat slip: the top side tests maxX
+              val tested = if (bugCompat && axis == AxisVert) cand.hi(AxisHor) else cand.hi(axis)
+              if (tested > bound) bound = cand.hi(axis)
+            } else {
+              while (cand.lo(axis) < bound && cand.view.lineSum(axis, 0) == 0) {
+                cand.lo(axis) += 1; cand.len(axis) -= 1
+              }
+              if (cand.lo(axis) < bound) bound = cand.lo(axis)
+            }
+            if (before == ((cand.lo(axis), cand.len(axis)))) go = false
+            else trimmedAny = true
+          }
         }
-        side += 1
       }
     }
     val trimmed = boxes.map(_.view)

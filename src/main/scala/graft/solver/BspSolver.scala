@@ -75,7 +75,7 @@ final class BspSolver(val grid: DensityGrid,
     val startTiles =
       if (polyBits.isDefined) List(startTile)
       else if (trimShape || grid.bounds.width >= 0x1000000)
-        checkForEmptyClusters(0, startTile, splitHoriz = true)
+        checkForEmptyClusters(0, startTile, AxisHor)
       else List(startTile)
 
     var fullSolution = new BspSolution(maxNodes)
@@ -255,17 +255,16 @@ final class BspSolver(val grid: DensityGrid,
 
   /**
    * Carve large empty bands (sea) out of the start tile so each dense
-   * cluster is solved separately: scan column (or row) sums, cut runs
-   * of empty lines longer than 30 degrees — or longer than 10 cells
-   * when both sides already hold > maxNodes/3 — and recurse on each
-   * remaining segment with the axes swapped (reference
+   * cluster is solved separately: scan the line sums along `axis`,
+   * cut runs of empty lines longer than 30 degrees — or longer than 10
+   * cells when both sides already hold > maxNodes/3 — and recurse on
+   * each remaining segment along the other axis (reference
    * `checkForEmptyClusters:407-471`).
    */
   private[solver] def checkForEmptyClusters(depth: Int, tile: GridTile,
-                                            splitHoriz: Boolean): List[GridTile] = {
+                                            axis: Int): List[GridTile] = {
     val maxEmpty = MapUnits.toMapUnit(30) / (1 << shift)
-    val len = if (splitHoriz) tile.width else tile.height
-    def lineSum(i: Int): Long = if (splitHoriz) tile.colSum(i) else tile.rowSum(i)
+    val len = tile.len(axis)
 
     // collect cut intervals [firstEmpty, firstEmpty+countEmpty)
     val cuts = mutable.ArrayBuffer.empty[(Int, Int)]
@@ -275,7 +274,7 @@ final class BspSolver(val grid: DensityGrid,
     var countRemaining = tile.count
     var i = 0
     while (i < len) {
-      val n = lineSum(i)
+      val n = tile.lineSum(axis, i)
       if (n == 0) {
         if (firstEmpty < 0) firstEmpty = i
         countEmpty += 1
@@ -294,7 +293,7 @@ final class BspSolver(val grid: DensityGrid,
     }
 
     if (cuts.isEmpty) {
-      if (depth == 0) checkForEmptyClusters(depth + 1, tile.trim(), !splitHoriz)
+      if (depth == 0) checkForEmptyClusters(depth + 1, tile.trim(), otherAxis(axis))
       else List(tile.trim())
     } else {
       // residual segments between cut bands
@@ -306,10 +305,9 @@ final class BspSolver(val grid: DensityGrid,
       }
       if (pos < len) segments += ((pos, len - pos))
       segments.toList.flatMap { case (s, l) =>
-        val part =
-          if (splitHoriz) GridTile.compute(solverGrid, tile.x + s, tile.y, l, tile.height)
-          else GridTile.compute(solverGrid, tile.x, tile.y + s, tile.width, l)
-        if (part.count > 0) checkForEmptyClusters(depth + 1, part.trim(), !splitHoriz)
+        val cnt = (s until s + l).iterator.map(tile.lineSum(axis, _)).sum
+        if (cnt > 0)
+          checkForEmptyClusters(depth + 1, tile.slice(axis, s, l, cnt).trim(), otherAxis(axis))
         else Nil
       }
     }
@@ -503,7 +501,7 @@ final class BspSolver(val grid: DensityGrid,
         countAxis += 1
         if (countAxis > 1) break = true
         else {
-          axis = if (axis == AxisHor) AxisVert else AxisHor
+          axis = otherAxis(axis)
           todo = generateTestCases(axis, tile, smi)
           usedTestPos = 0
         }
@@ -515,10 +513,7 @@ final class BspSolver(val grid: DensityGrid,
         if (!skip) {
           val splitPos = todo(usedTestPos)
           usedTestPos += 1
-          val ok =
-            if (axis == AxisHor) tile.splitHoriz(splitPos, smi)
-            else tile.splitVert(splitPos, smi)
-          if (ok) {
+          if (tile.split(axis, splitPos, smi)) {
             var part0 = smi.part0
             var part1 = smi.part1
             if (trimTiles) { part0 = part0.trim(); part1 = part1.trim() }
@@ -564,19 +559,20 @@ final class BspSolver(val grid: DensityGrid,
    */
   private[solver] def generateTestCases(axis: Int, tile: GridTile,
                                         smi: SplitMeta): Array[Int] = {
-    if (searchAll)
-      return if (axis == AxisHor) tile.genXTests(smi) else tile.genYTests(smi)
+    if (searchAll) return tile.genTests(axis, smi)
     val ratio = tile.aspectRatio
     if (ratio < 1.0 / 32 || ratio > 32 ||
       (ratio < 1.0 / 16 && axis == AxisHor) || (ratio > 16 && axis == AxisVert))
       return Array.emptyIntArray
-    val start = if (axis == AxisHor) tile.findValidStartX(smi) else tile.findValidStartY(smi)
-    val end = if (axis == AxisHor) tile.findValidEndX(smi) else tile.findValidEndY(smi)
+    val start = tile.findValidStart(axis, smi)
+    val end = tile.findValidEnd(axis, smi)
     val range = end - start
     if (range < 0) return Array.emptyIntArray
     val tests = mutable.ArrayBuffer.empty[Int]
-    if (range > 1024 && ((axis == AxisHor && tile.width >= maxTileWidth) ||
-      (axis == AxisVert && tile.height >= maxTileWidth))) {
+    // both axes compare against maxTileWidth, as the reference's
+    // generateTestCases does; maxTileHeight here would change which
+    // huge tiles take the coarse fractions
+    if (range > 1024 && tile.len(axis) >= maxTileWidth) {
       var i = 5
       while (i > 1) { tests += start + range / i; i -= 1 }
     } else if (tile.count < maxNodes * 4 && range > 256) {
@@ -593,23 +589,18 @@ final class BspSolver(val grid: DensityGrid,
       var nMin = tile.count / maxNodes
       if (nMin * maxNodes < tile.count) nMin += 1
       if (nMin > 2 && nMin * maxNodes - minNodes < tile.count && ratio > 0.125 && ratio < 8) {
-        return if (axis == AxisHor) tile.genXTests(smi) else tile.genYTests(smi)
+        return tile.genTests(axis, smi)
       }
       if (nMax == 2 || nMin == 2) {
-        tests += (if (axis == AxisHor) tile.findHorizontalMiddle(smi)
-                  else tile.findVerticalMiddle(smi))
-        var pos = if (axis == AxisHor) tile.findFirstXHigher(smi, minNodes) + 1
-                  else tile.findFirstYHigher(smi, minNodes) + 1
+        tests += tile.findMiddle(axis, smi)
+        var pos = tile.findFirstHigher(axis, smi, minNodes) + 1
         if (tests(0) != pos) tests += pos
-        pos = if (axis == AxisHor) tile.findFirstXHigher(smi, maxNodes)
-              else tile.findFirstYHigher(smi, maxNodes)
+        pos = tile.findFirstHigher(axis, smi, maxNodes)
         if (!tests.contains(pos)) tests += pos
       } else if (range == 0) {
         tests += start
       } else {
-        if (nMax != 3)
-          tests += (if (axis == AxisHor) tile.findHorizontalMiddle(smi)
-                    else tile.findVerticalMiddle(smi))
+        if (nMax != 3) tests += tile.findMiddle(axis, smi)
         if (!tests.contains(start)) tests += start
         if (!tests.contains(end)) tests += end
       }
@@ -638,8 +629,10 @@ object BspSolver {
   final val MaxLatDegrees = 85
   final val MaxLonDegrees = 90
   final val MaxLoops = 100
+  /** Split axes: AxisHor searches columns (x), AxisVert rows (y). */
   final val AxisHor = 0
   final val AxisVert = 1
+  def otherAxis(axis: Int): Int = 1 - axis
   final val NiceMaxAspectRatio = 4.0
   final val VeryNiceFillRatio = 0.93
   final val LargeMaxNodes = 10000000L

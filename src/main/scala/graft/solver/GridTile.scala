@@ -1,5 +1,7 @@
 package graft.solver
 
+import graft.solver.BspSolver.{AxisHor, AxisVert}
+
 /**
  * A rectangular view (in grid-cell coordinates) over a [[SolverGrid]]
  * with a cached point count and the prefix-sum helpers the BSP search
@@ -11,21 +13,30 @@ package graft.solver
 final class GridTile(val g: SolverGrid, val x: Int, val y: Int,
                      val width: Int, val height: Int, val count: Long) {
 
-  def maxX: Int = x + width
-  def maxY: Int = y + height
+  /** Extent along `axis`: the width for [[BspSolver.AxisHor]]
+    * (columns), the height for [[BspSolver.AxisVert]] (rows). */
+  def len(axis: Int): Int = if (axis == AxisHor) width else height
 
-  /** Sum of the counts in tile-relative row `r` (0 .. height-1) —
-    * O(1) via the grid's row prefix sums. */
-  def rowSum(r: Int): Long = g.rowRangeSum(y + r, x, x + width)
+  /** Grid coordinate of the tile's first line along `axis`. */
+  def origin(axis: Int): Int = if (axis == AxisHor) x else y
 
-  /** Sum of the counts in tile-relative column `c` (0 .. width-1) —
-    * O(1) via the grid's column prefix sums. */
-  def colSum(c: Int): Long = g.colRangeSum(x + c, y, y + height)
+  /** Sum of the counts in tile-relative line `i` along `axis` (column
+    * `i` for AxisHor, row `i` for AxisVert) — O(1) via the grid's
+    * prefix sums. */
+  def lineSum(axis: Int, i: Int): Long =
+    if (axis == AxisHor) g.colRangeSum(x + i, y, y + height)
+    else g.rowRangeSum(y + i, x, x + width)
+
+  /** Lines [start, start + n) along `axis` over the full extent of the
+    * other axis, holding `cnt` points. */
+  def slice(axis: Int, start: Int, n: Int, cnt: Long): GridTile =
+    if (axis == AxisHor) new GridTile(g, x + start, y, n, height, cnt)
+    else new GridTile(g, x, y + start, width, n, cnt)
 
   def recount(): Long = {
     var sum = 0L
     var r = 0
-    while (r < height) { sum += rowSum(r); r += 1 }
+    while (r < height) { sum += lineSum(AxisVert, r); r += 1 }
     sum
   }
 
@@ -34,196 +45,113 @@ final class GridTile(val g: SolverGrid, val x: Int, val y: Int,
   def aspectRatio: Double = g.aspectRatio(x, y, width, height)
 
   // ---- split-position search helpers ------------------------------------
+  // Each takes the axis it searches along; positions are tile-relative
+  // line indices and the landmarks they find are cached in `m` per axis.
 
-  /** Column index where the left prefix sum first crosses count/2,
-    * snapped to the nearer side (reference
-    * `Tile.findHorizontalMiddle:196-225`). */
-  def findHorizontalMiddle(m: SplitMeta): Int = {
-    if (count == 0 || width < 2) m.horMidPos = 0
-    else if (m.horMidPos < 0) {
+  /** Line index where the prefix sum first crosses count/2, snapped
+    * to the nearer side (reference `Tile.findHorizontalMiddle:196-225`,
+    * `findVerticalMiddle`). */
+  def findMiddle(axis: Int, m: SplitMeta): Int = {
+    val n = len(axis)
+    if (count == 0 || n < 2) m.setMidPos(axis, 0)
+    else if (m.midPos(axis) < 0) {
       val target = count / 2
       var sum = 0L
       var lastSum = 0L
-      var pos = math.max(m.firstNonZeroX, 0)
+      var pos = math.max(m.firstNonZero(axis), 0)
       var done = false
-      while (!done && pos <= width) {
+      while (!done && pos <= n) {
         lastSum = sum
-        sum += colSum(pos)
+        sum += lineSum(axis, pos)
         if (sum != 0) {
-          if (lastSum <= 0) m.firstNonZeroX = pos
+          if (lastSum <= 0) m.setFirstNonZero(axis, pos)
           if (sum > target) {
-            if (sum - target < target - lastSum && pos + 1 < width) m.horMidPos = pos + 1
-            else m.horMidPos = pos
+            if (sum - target < target - lastSum && pos + 1 < n) m.setMidPos(axis, pos + 1)
+            else m.setMidPos(axis, pos)
             done = true
           }
         }
         pos += 1
       }
     }
-    m.horMidPos
+    m.midPos(axis)
   }
 
-  /** Row analog of [[findHorizontalMiddle]]. */
-  def findVerticalMiddle(m: SplitMeta): Int = {
-    if (count == 0 || height < 2) m.vertMidPos = 0
-    else if (m.vertMidPos < 0) {
-      val target = count / 2
-      var sum = 0L
-      var lastSum = 0L
-      var pos = math.max(m.firstNonZeroY, 0)
-      var done = false
-      while (!done && pos <= height) {
-        lastSum = sum
-        sum += rowSum(pos)
-        if (sum != 0) {
-          if (lastSum <= 0) m.firstNonZeroY = pos
-          if (sum > target) {
-            if (sum - target < target - lastSum && pos + 1 < height) m.vertMidPos = pos + 1
-            else m.vertMidPos = pos
-            done = true
-          }
-        }
-        pos += 1
-      }
-    }
-    m.vertMidPos
-  }
-
-  /** Smallest split column leaving >= minNodes on the left
-    * (reference `Tile.findValidStartX:334-353`). Returns `width` when
-    * none exists. */
-  def findValidStartX(m: SplitMeta): Int = {
-    if (m.validStartX >= 0) return m.validStartX
+  /** Smallest split position leaving >= minNodes before it (reference
+    * `Tile.findValidStartX:334-353`, `findValidStartY`). Returns
+    * `len(axis)` when none exists. */
+  def findValidStart(axis: Int, m: SplitMeta): Int = {
+    if (m.validStart(axis) >= 0) return m.validStart(axis)
+    val n = len(axis)
     var sum = 0L
-    var i = math.max(m.firstNonZeroX, 0)
-    while (i < width) {
-      sum += colSum(i)
+    var i = math.max(m.firstNonZero(axis), 0)
+    while (i < n) {
+      sum += lineSum(axis, i)
       if (sum != 0) {
-        if (m.firstNonZeroX < 0) m.firstNonZeroX = i
-        if (sum >= m.minNodes) { m.validStartX = i + 1; return i + 1 }
+        if (m.firstNonZero(axis) < 0) m.setFirstNonZero(axis, i)
+        if (sum >= m.minNodes) { m.setValidStart(axis, i + 1); return i + 1 }
       }
       i += 1
     }
-    m.validStartX = width
-    width
+    m.setValidStart(axis, n)
+    n
   }
 
-  /** Largest split column leaving >= minNodes on the right. */
-  def findValidEndX(m: SplitMeta): Int = {
-    if (m.validEndX < 0) {
-      var i = if (m.lastNonZeroX > 0) m.lastNonZeroX else width - 1
+  /** Largest split position leaving >= minNodes from it on. */
+  def findValidEnd(axis: Int, m: SplitMeta): Int = {
+    if (m.validEnd(axis) < 0) {
+      var i = if (m.lastNonZero(axis) > 0) m.lastNonZero(axis) else len(axis) - 1
       var sum = 0L
       var done = false
       while (!done && i >= 0) {
-        sum += colSum(i)
-        if (sum > 0 && m.lastNonZeroX < 0) m.lastNonZeroX = i
-        if (sum >= m.minNodes) { m.validEndX = i; done = true }
+        sum += lineSum(axis, i)
+        if (sum > 0 && m.lastNonZero(axis) < 0) m.setLastNonZero(axis, i)
+        if (sum >= m.minNodes) { m.setValidEnd(axis, i); done = true }
         i -= 1
       }
     }
-    m.validEndX
+    m.validEnd(axis)
   }
 
-  def findValidStartY(m: SplitMeta): Int = {
-    if (m.validStartY >= 0) return m.validStartY
+  /** First line where the prefix sum exceeds `limit`; `len(axis)` if
+    * never. */
+  def findFirstHigher(axis: Int, m: SplitMeta, limit: Long): Int = {
+    val n = len(axis)
     var sum = 0L
-    var i = math.max(m.firstNonZeroY, 0)
-    while (i < height) {
-      sum += rowSum(i)
+    var i = math.max(m.firstNonZero(axis), 0)
+    while (i < n) {
+      sum += lineSum(axis, i)
       if (sum != 0) {
-        if (m.firstNonZeroY < 0) m.firstNonZeroY = i
-        if (sum >= m.minNodes) { m.validStartY = i + 1; return i + 1 }
-      }
-      i += 1
-    }
-    m.validStartY = height
-    height
-  }
-
-  def findValidEndY(m: SplitMeta): Int = {
-    if (m.validEndY < 0) {
-      var i = if (m.lastNonZeroY > 0) m.lastNonZeroY else height - 1
-      var sum = 0L
-      var done = false
-      while (!done && i >= 0) {
-        sum += rowSum(i)
-        if (sum > 0 && m.lastNonZeroY < 0) m.lastNonZeroY = i
-        if (sum >= m.minNodes) { m.validEndY = i; done = true }
-        i -= 1
-      }
-    }
-    m.validEndY
-  }
-
-  /** First column where the left prefix sum exceeds `limit`; `width`
-    * if never. */
-  def findFirstXHigher(m: SplitMeta, limit: Long): Int = {
-    var sum = 0L
-    var i = math.max(m.firstNonZeroX, 0)
-    while (i < width) {
-      sum += colSum(i)
-      if (sum != 0) {
-        if (m.firstNonZeroX < 0) m.firstNonZeroX = i
+        if (m.firstNonZero(axis) < 0) m.setFirstNonZero(axis, i)
         if (sum > limit) return i
       }
       i += 1
     }
-    width
-  }
-
-  def findFirstYHigher(m: SplitMeta, limit: Long): Int = {
-    var sum = 0L
-    var i = math.max(m.firstNonZeroY, 0)
-    while (i < height) {
-      sum += rowSum(i)
-      if (sum != 0) {
-        if (m.firstNonZeroY < 0) m.firstNonZeroY = i
-        if (sum > limit) return i
-      }
-      i += 1
-    }
-    height
+    n
   }
 
   // ---- splitting ---------------------------------------------------------
 
-  /** Split left/right at column `splitX`; fills m.part0/part1 and
-    * returns false when either part would fall below minNodes
-    * (reference `Tile.splitHoriz:268-293`). Sums the smaller side. */
-  def splitHoriz(splitX: Int, m: SplitMeta): Boolean = {
-    if (splitX <= 0 || splitX >= width) return false
+  /** Split before line `pos` along `axis` (left/right for AxisHor,
+    * bottom/top for AxisVert); fills m.part0/part1 and returns false
+    * when either part would fall below minNodes (reference
+    * `Tile.splitHoriz:268-293`, `splitVert`). Sums the smaller side. */
+  def split(axis: Int, pos: Int, m: SplitMeta): Boolean = {
+    val n = len(axis)
+    if (pos <= 0 || pos >= n) return false
     var sum = 0L
-    if (splitX <= width / 2) {
-      var pos = math.max(m.firstNonZeroX, 0)
-      while (pos < splitX) { sum += colSum(pos); pos += 1 }
+    if (pos <= n / 2) {
+      var i = math.max(m.firstNonZero(axis), 0)
+      while (i < pos) { sum += lineSum(axis, i); i += 1 }
     } else {
-      val end = if (m.lastNonZeroX > 0) m.lastNonZeroX + 1 else width
-      var pos = splitX
-      while (pos < end) { sum += colSum(pos); pos += 1 }
+      val end = if (m.lastNonZero(axis) > 0) m.lastNonZero(axis) + 1 else n
+      var i = pos
+      while (i < end) { sum += lineSum(axis, i); i += 1 }
       sum = count - sum
     }
     if (sum < m.minNodes || count - sum < m.minNodes) return false
-    m.part0 = new GridTile(g, x, y, splitX, height, sum)
-    m.part1 = new GridTile(g, x + splitX, y, width - splitX, height, count - sum)
-    true
-  }
-
-  /** Split bottom/top at row `splitY`. */
-  def splitVert(splitY: Int, m: SplitMeta): Boolean = {
-    if (splitY <= 0 || splitY >= height) return false
-    var sum = 0L
-    if (splitY <= height / 2) {
-      var pos = math.max(m.firstNonZeroY, 0)
-      while (pos < splitY) { sum += rowSum(pos); pos += 1 }
-    } else {
-      val end = if (m.lastNonZeroY > 0) m.lastNonZeroY + 1 else height
-      var pos = splitY
-      while (pos < end) { sum += rowSum(pos); pos += 1 }
-      sum = count - sum
-    }
-    if (sum < m.minNodes || count - sum < m.minNodes) return false
-    m.part0 = new GridTile(g, x, y, width, splitY, sum)
-    m.part1 = new GridTile(g, x, y + splitY, width, height - splitY, count - sum)
+    m.part0 = slice(axis, 0, pos, sum)
+    m.part1 = slice(axis, pos, n - pos, count - sum)
     true
   }
 
@@ -247,52 +175,44 @@ final class GridTile(val g: SolverGrid, val x: Int, val y: Int,
     java.util.Arrays.copyOf(out, n)
   }
 
-  def genXTests(m: SplitMeta): Array[Int] =
-    candidatePositions(findValidStartX(m), findValidEndX(m))
-  def genYTests(m: SplitMeta): Array[Int] =
-    candidatePositions(findValidStartY(m), findValidEndY(m))
+  def genTests(axis: Int, m: SplitMeta): Array[Int] =
+    candidatePositions(findValidStart(axis, m), findValidEnd(axis, m))
 
   // ---- trim / polygon ----------------------------------------------------
 
-  private def colNeeded(c: Int): Boolean =
-    if (!g.hasPolygon) colSum(c) > 0
-    else {
-      // inside-polygon test: any cell of the column in the polygon —
-      // O(1) via the polygon prefix counts when available
-      val n = g.polyInsideCount(x + c, y, x + c + 1, y + height)
-      if (n >= 0) n > 0
-      else {
-        var i = 0
-        var in = false
-        while (!in && i < height) { in = g.inPolygon(x + c, y + i); i += 1 }
-        in
-      }
-    }
+  private def lineNeeded(axis: Int, i: Int): Boolean =
+    if (!g.hasPolygon) lineSum(axis, i) > 0
+    else if (axis == AxisHor) anyInPolygon(x + i, y, 1, height)
+    else anyInPolygon(x, y + i, width, 1)
 
-  private def rowNeeded(r: Int): Boolean =
-    if (!g.hasPolygon) rowSum(r) > 0
-    else {
-      val n = g.polyInsideCount(x, y + r, x + width, y + r + 1)
-      if (n >= 0) n > 0
-      else {
-        var i = 0
-        var in = false
-        while (!in && i < width) { in = g.inPolygon(x + i, y + r); i += 1 }
-        in
+  /** True when some cell of the rectangle is inside the polygon — O(1)
+    * via the polygon prefix counts when available. */
+  private def anyInPolygon(cx: Int, cy: Int, w: Int, h: Int): Boolean = {
+    val n = g.polyInsideCount(cx, cy, cx + w, cy + h)
+    if (n >= 0) return n > 0
+    var i = 0
+    while (i < w) {
+      var j = 0
+      while (j < h) {
+        if (g.inPolygon(cx + i, cy + j)) return true
+        j += 1
       }
+      i += 1
     }
+    false
+  }
 
   /** Shrink away empty (or fully-outside-polygon) border rows/columns;
     * returns a new tile (reference `Tile.trim:473-537`). */
   def trim(): GridTile = {
     var lo = 0
-    while (lo < width && !colNeeded(lo)) lo += 1
+    while (lo < width && !lineNeeded(AxisHor, lo)) lo += 1
     var hi = width - 1
-    while (hi >= lo && !colNeeded(hi)) hi -= 1
+    while (hi >= lo && !lineNeeded(AxisHor, hi)) hi -= 1
     var bo = 0
-    while (bo < height && !rowNeeded(bo)) bo += 1
+    while (bo < height && !lineNeeded(AxisVert, bo)) bo += 1
     var to = height - 1
-    while (to >= bo && !rowNeeded(to)) to -= 1
+    while (to >= bo && !lineNeeded(AxisVert, to)) to -= 1
     if (lo > hi || bo > to) return new GridTile(g, x, y, 0, 0, 0)
     val nw = hi - lo + 1
     val nh = to - bo + 1
@@ -301,23 +221,8 @@ final class GridTile(val g: SolverGrid, val x: Int, val y: Int,
     else GridTile.compute(g, x + lo, y + bo, nw, nh)
   }
 
-  /** True when no cell of the tile is inside the polygon — O(1)
-    * rectangle count when the polygon prefix table exists. */
-  def outsidePolygon: Boolean = {
-    if (!g.hasPolygon) return false
-    val n = g.polyInsideCount(x, y, x + width, y + height)
-    if (n >= 0) return n == 0
-    var cx = 0
-    while (cx < width) {
-      var cy = 0
-      while (cy < height) {
-        if (g.inPolygon(x + cx, y + cy)) return false
-        cy += 1
-      }
-      cx += 1
-    }
-    true
-  }
+  /** True when no cell of the tile is inside the polygon. */
+  def outsidePolygon: Boolean = g.hasPolygon && !anyInPolygon(x, y, width, height)
 
   /** Fraction of grid cells outside the bounding polygon (0 when no
     * polygon; reference `Tile.calcOutsidePolygonRatio:582-602`) —
@@ -372,27 +277,48 @@ object GridTile {
  * O(1), so only the scalar landmarks remain — the values each
  * landmark takes are identical (they are exact functions of the tile
  * and minNodes), so the search is unchanged.
+ *
+ * Each landmark is a tile-relative line index (-1 = not yet known),
+ * kept once per axis in plain fields read and written by axis: one
+ * SplitMeta is built per searched tile, and per-axis holder objects
+ * measurably slowed the search while the JIT warms up.
  */
 final class SplitMeta(tile: GridTile, parent: GridTile, parentMeta: SplitMeta) {
   var minNodes: Long = if (parentMeta != null) parentMeta.minNodes else 0L
   var part0: GridTile = _
   var part1: GridTile = _
-  var validStartX: Int = -1
-  var validStartY: Int = -1
-  var validEndX: Int = -1
-  var validEndY: Int = -1
-  var firstNonZeroX: Int = -1
-  var firstNonZeroY: Int = -1
-  var lastNonZeroX: Int = -1
-  var lastNonZeroY: Int = -1
-  var horMidPos: Int = -1
-  var vertMidPos: Int = -1
+  private var validStartX, validStartY = -1
+  private var validEndX, validEndY = -1
+  private var firstNonZeroX, firstNonZeroY = -1
+  private var lastNonZeroX, lastNonZeroY = -1
+  private var midPosX, midPosY = -1
+
+  def validStart(axis: Int): Int = if (axis == AxisHor) validStartX else validStartY
+  def setValidStart(axis: Int, v: Int): Unit =
+    if (axis == AxisHor) validStartX = v else validStartY = v
+  def validEnd(axis: Int): Int = if (axis == AxisHor) validEndX else validEndY
+  def setValidEnd(axis: Int, v: Int): Unit =
+    if (axis == AxisHor) validEndX = v else validEndY = v
+  def firstNonZero(axis: Int): Int = if (axis == AxisHor) firstNonZeroX else firstNonZeroY
+  def setFirstNonZero(axis: Int, v: Int): Unit =
+    if (axis == AxisHor) firstNonZeroX = v else firstNonZeroY = v
+  def lastNonZero(axis: Int): Int = if (axis == AxisHor) lastNonZeroX else lastNonZeroY
+  def setLastNonZero(axis: Int, v: Int): Unit =
+    if (axis == AxisHor) lastNonZeroX = v else lastNonZeroY = v
+  def midPos(axis: Int): Int = if (axis == AxisHor) midPosX else midPosY
+  def setMidPos(axis: Int, v: Int): Unit = if (axis == AxisHor) midPosX = v else midPosY = v
 
   locally {
-    if (parent != null && parent.width == tile.width && tile.y == parent.y)
-      firstNonZeroY = parentMeta.firstNonZeroY
-    if (parent != null && parent.height == tile.height && tile.x == parent.x)
-      firstNonZeroX = parentMeta.firstNonZeroX
+    // a child spanning the parent's whole extent across `axis` and
+    // starting where the parent starts along it has the same first
+    // non-empty line
+    var axis = AxisHor
+    while (parent != null && axis <= AxisVert) {
+      val across = BspSolver.otherAxis(axis)
+      if (parent.len(across) == tile.len(across) && tile.origin(axis) == parent.origin(axis))
+        setFirstNonZero(axis, parentMeta.firstNonZero(axis))
+      axis += 1
+    }
   }
 
   def setMinNodes(n: Long): Unit = {
@@ -405,32 +331,28 @@ final class SplitMeta(tile: GridTile, parent: GridTile, parentMeta: SplitMeta) {
   /** Push refreshed landmarks back up so the sibling benefits
     * (reference `TileMetaInfo.propagateToParent:203-244`). */
   def propagateToParent(parentMeta: SplitMeta, tile: GridTile, parent: GridTile): Unit = {
-    if (parent.width == tile.width) {
-      val dst = tile.y - parent.y
-      if (dst == 0) {
-        if (parentMeta.firstNonZeroY < 0 && firstNonZeroY >= 0)
-          parentMeta.firstNonZeroY = firstNonZeroY
-        if (parentMeta.validStartY < 0 && validStartY >= 0)
-          parentMeta.validStartY = validStartY
+    propagate(AxisVert, parentMeta, tile, parent)
+    propagate(AxisHor, parentMeta, tile, parent)
+  }
+
+  /** The landmarks along `axis`, when the child spans the parent's
+    * whole extent across it: the first part's start landmarks are the
+    * parent's, the second part's end landmarks shift by its offset. */
+  private def propagate(axis: Int, parentMeta: SplitMeta,
+                        tile: GridTile, parent: GridTile): Unit = {
+    val across = BspSolver.otherAxis(axis)
+    if (parent.len(across) == tile.len(across)) {
+      val off = tile.origin(axis) - parent.origin(axis)
+      if (off == 0) {
+        if (parentMeta.firstNonZero(axis) < 0 && firstNonZero(axis) >= 0)
+          parentMeta.setFirstNonZero(axis, firstNonZero(axis))
+        if (parentMeta.validStart(axis) < 0 && validStart(axis) >= 0)
+          parentMeta.setValidStart(axis, validStart(axis))
       } else {
-        if (parentMeta.lastNonZeroY < 0 && lastNonZeroY >= 0)
-          parentMeta.lastNonZeroY = dst + lastNonZeroY
-        if (parentMeta.validEndY < 0 && validEndY >= 0)
-          parentMeta.validEndY = dst + validEndY
-      }
-    }
-    if (parent.height == tile.height) {
-      val dst = tile.x - parent.x
-      if (dst == 0) {
-        if (parentMeta.firstNonZeroX < 0 && firstNonZeroX >= 0)
-          parentMeta.firstNonZeroX = firstNonZeroX
-        if (parentMeta.validStartX < 0 && validStartX >= 0)
-          parentMeta.validStartX = validStartX
-      } else {
-        if (parentMeta.lastNonZeroX < 0 && lastNonZeroX >= 0)
-          parentMeta.lastNonZeroX = dst + lastNonZeroX
-        if (parentMeta.validEndX < 0 && validEndX >= 0)
-          parentMeta.validEndX = dst + validEndX
+        if (parentMeta.lastNonZero(axis) < 0 && lastNonZero(axis) >= 0)
+          parentMeta.setLastNonZero(axis, off + lastNonZero(axis))
+        if (parentMeta.validEnd(axis) < 0 && validEnd(axis) >= 0)
+          parentMeta.setValidEnd(axis, off + validEnd(axis))
       }
     }
   }

@@ -111,13 +111,7 @@ class GeomOutputSpec extends AnyFunSuite {
     import graft.solver.BspSolver
     val pts = TestSurfaces.pointsUniform(20000)
     val grid = TestSurfaces.gridOf(pts, 12)
-    val b = grid.bounds
-    // concave L: full west half + the south half of the east half
-    val midLon = b.minLon + b.width / 2
-    val midLat = b.minLat + b.height / 2
-    val poly = PolygonSupport.polygonOf(Seq((Seq(
-      (b.minLat, b.minLon), (b.maxLat, b.minLon), (b.maxLat, midLon),
-      (midLat, midLon), (midLat, b.maxLon), (b.minLat, b.maxLon)), true)))
+    val poly = TestSurfaces.lShape(grid.bounds)
     def solve(slicing: Boolean): (List[graft.geo.TileRect], Long) = {
       val bits = PolygonSupport.rasterToGrid(poly, grid)
       val s = new BspSolver(grid)

@@ -305,19 +305,21 @@ class MainSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft_probf").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     graft.output.AreaWriters.writeProblemList(s"$out/given.list",
-      Seq("7", "11"), Nil)
+      Seq("7", "11"), Seq("13"))
     val a = SplitterArgs.parse(Seq(
       s"--output-dir=$out", "--stop-after=handle-problem-list",
       "--max-nodes=200", s"--problem-file=$out/given.list",
       "/root/testdata/sf0.001/documents.parquet")).toOption.get
     assert(Main.run(spark, a) === "handle-problem-list")
-    // the written problem list echoes the file, not a computation
-    val (ways, _) = graft.output.AreaWriters.readProblemList(s"$out/problem.list")
+    // the written problem list echoes the file, rel lines as rel lines,
+    // not a computation
+    val (ways, rels) = graft.output.AreaWriters.readProblemList(s"$out/problem.list")
     assert(ways === Seq("11", "7"))
+    assert(rels === Seq("13"))
     // keep-complete handled exactly the given links
     val linkIds = spark.read.parquet(s"$out/link_tiles.parquet")
       .select("link_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(linkIds.subsetOf(Set(7L, 11L)) && linkIds.nonEmpty,
+    assert(linkIds.subsetOf(Set(7L, 11L, 13L)) && linkIds.nonEmpty,
       s"link_tiles must cover only the problem-file links, got $linkIds")
   }
 
@@ -407,5 +409,48 @@ class MainSpec extends AnyFunSuite {
     val a1 = graft.output.AreaWriters.readAreasList(s"$out/areas.list")
     val a2 = graft.output.AreaWriters.readAreasList(s"$reused/areas.list")
     assert(a1 === a2)
+
+    // a split file keeps the map ids it was written with: through dist,
+    // every tile and link_tiles row carries its area's own id, whatever
+    // --mapid says
+    def ran(args: String*): String = Main.run(spark, SplitterArgs.parse(args).toOption.get)
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("map_id").distinct().collect().map(_.getAs[Number](0).longValue).toSet
+    val own = java.nio.file.Files.createTempDirectory("graft_main4").toString
+    val docs = first.inputs.head
+    ran(s"--output-dir=$own", "--stop-after=split", "--max-nodes=200", "--mapid=70000001", docs)
+    val ownIds = graft.output.AreaWriters.readAreasList(s"$own/areas.list").map(_.mapId.toLong)
+    assert(ownIds.head === 70000001L && ownIds.size > 1)
+    val dist = java.nio.file.Files.createTempDirectory("graft_main5").toString
+    assert(ran(s"--output-dir=$dist", s"--split-file=$own/areas.list", docs) === "dist")
+    assert(ids(spark.read.parquet(s"$dist/tiles")) === ownIds.toSet)
+    val linkIds = ids(spark.read.parquet(s"$dist/link_tiles.parquet"))
+    assert(linkIds.nonEmpty && linkIds.subsetOf(ownIds.toSet), s"link_tiles map ids $linkIds")
+
+    // OSM tiles: the same files, bytes and rows_written as a run whose
+    // --mapid matches the split file
+    val osm = java.nio.file.Files.createTempDirectory("graft_main_osm").toString
+    OsmFixture.writeFile(s"$osm/in.o5m", OsmFixture.corpus(1000))
+    def osmRun(out: String, extra: String*): (Map[String, Seq[Byte]], String) = {
+      ran(Seq(s"--output-dir=$osm/$out", "--max-nodes=300", "--output=o5m") ++ extra :+
+        s"$osm/in.o5m": _*)
+      val tiles = Option(new java.io.File(s"$osm/$out/tiles").listFiles()).toSeq.flatten
+        .filterNot(_.getName.startsWith(".")) // checksum side files
+        .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+      val metrics = scala.io.Source.fromFile(s"$osm/$out/metrics.jsonl")
+      val written = try metrics.getLines().filter(_.contains("rows_written")).mkString
+        finally metrics.close()
+      (tiles, written)
+    }
+    osmRun("solve", "--stop-after=split", "--mapid=70000001")
+    val osmIds = graft.output.AreaWriters.readAreasList(s"$osm/solve/areas.list").map(_.mapId)
+    val (matching, writtenMatching) =
+      osmRun("matching", s"--split-file=$osm/solve/areas.list", "--mapid=70000001")
+    val (default, writtenDefault) = osmRun("default", s"--split-file=$osm/solve/areas.list")
+    assert(default.keySet === osmIds.map(id => f"$id%08d.o5m").toSet)
+    default.foreach { case (name, bytes) =>
+      assert(matching(name) === bytes, s"tile $name differs from the matching-id run")
+    }
+    assert(writtenDefault === writtenMatching && writtenMatching.nonEmpty)
   }
 }

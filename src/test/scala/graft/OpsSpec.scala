@@ -408,6 +408,23 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("nearest_index edge contracts: NaN scores never win, a null element gives null") {
+    import graft.functions.NearestIndexExpr
+    // row 0 scores NaN against any vector (NaN * x); rows 1 and 2 are
+    // finite, and row 1 is the best of them for a positive first element
+    val table = Seq(Seq(Double.NaN, 0.0), Seq(2.0, 0.0), Seq(1.0, 0.0))
+    val vecs = spark.sql("""SELECT * FROM VALUES
+      (0, array(1D, 5D)),                       -- NaN row beaten: 1
+      (1, array(double('NaN'), 1D)),            -- every score NaN: 0
+      (2, array(CAST(NULL AS DOUBLE), 1D)),     -- null element: null
+      (3, CAST(NULL AS ARRAY<DOUBLE>))          -- null array: null
+      AS t(i, vec)""")
+    val got = vecs.orderBy("i")
+      .select(NearestIndexExpr.nearestIndex(col("vec"), table, 0, 2).as("idx"))
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+    assert(got === Seq(Some(1L), Some(0L), None, None))
+  }
+
   test("dot_f64 codegen expression is bit-identical to the HOF formulation") {
     import graft.functions.DotF64Expr.dotF64
     def hof(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =

@@ -268,7 +268,7 @@ class OsmPipelineSpec extends AnyFunSuite {
     assert(written === Seq(decoded))
   }
 
-  test("tile sink: rerun overwrite, empty-area backfill, splittable o5m opt-in") {
+  test("tile sink: rerun overwrite, empty-area backfill") {
     import graft.geo.MapUnits
     import graft.output.{AreaDef, OsmTileSink}
     val es = corpus(4000)
@@ -312,23 +312,6 @@ class OsmPipelineSpec extends AnyFunSuite {
     Seq(8001, 8002, 8003).map(tileBytes).zip(before).zipWithIndex.foreach {
       case ((now, was), i) => assert(now.sameElements(was), s"tile index $i changed on rerun")
     }
-
-    // o5mResetEvery opt-in: engine-written tiles become byte-range
-    // splittable for this engine's own source
-    val dir2 = s"$dir/tiles_split"
-    Files.createDirectories(java.nio.file.Paths.get(dir2))
-    OsmTileSink.write(assigned, dir2, "o5m", areas, o5mResetEvery = 4096L)
-    val tile1 = new org.apache.hadoop.fs.Path(s"$dir2/00008001.o5m")
-    val fs = tile1.getFileSystem(spark.sessionState.newHadoopConf())
-    assert(graft.sources.O5mRangeIterator.isSplittable(fs, tile1,
-      fs.getFileStatus(tile1).getLen))
-    val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
-      val df = spark.read.format("osm").load(s"$dir2/00008001.o5m")
-      assert(df.rdd.getNumPartitions > 1, "splittable tile must fan out")
-      assert(df.count() === tileEnts(8001).size.toLong)
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
   }
 
   test("streaming OSM source: new file drops arrive as micro-batches") {

@@ -126,6 +126,64 @@ class SolverSpec extends AnyFunSuite {
     }
   }
 
+  test("golden: exact tiles and search effort on fixed fixtures") {
+    // pins the solver's exact output: an MD5 of each tile list and the
+    // tiles the search examined (testedTiles), so a refactor that
+    // changes the positions visited or their order fails here even
+    // when every invariant above still holds. Fixtures whose search
+    // examines more than about 10^6 tiles are left out to keep the case
+    // within seconds, so splitIntoTiles(3) and the constrained L-shape
+    // run at res 11 (at res 13 and 12 they examine 3.0 M and 1.5 M).
+    import graft.geo.CoordSynthesis
+    import graft.solver.PolygonSupport
+    def digest(tiles: Seq[TileRect]): String =
+      java.security.MessageDigest.getInstance("MD5").digest(tiles
+        .map(t => s"${t.minLat},${t.minLon},${t.maxLat},${t.maxLon}").mkString(";")
+        .getBytes("UTF-8")).map("%02x".format(_)).mkString
+    def run(grid: DensityGrid, trim: Boolean = true, bugCompat: Boolean = false,
+            maxNodes: Long = 2000L)(solve: BspSolver => List[TileRect]): String = {
+      val s = new BspSolver(grid)
+      s.maxNodes = maxNodes
+      s.trimShape = trim
+      s.bugCompatTrim = bugCompat
+      val tiles = solve(s)
+      s"${tiles.size} tiles ${digest(tiles)} tested ${s.testedTiles}"
+    }
+    def grid(mode: String, res: Int) = TestSurfaces.gridOf(TestSurfaces.all(20000)(mode), res)
+    def lShape(g: DensityGrid) = PolygonSupport.rasterToGrid(TestSurfaces.lShape(g.bounds), g)
+    val (uniform11, uniform12) = (grid("uniform", 11), grid("uniform", 12))
+    // the corpus_split benchmark's solve: 50k synthesized documents
+    val corpus = new DensityGrid(TileRect(CoordSynthesis.LatMin, CoordSynthesis.LonMin,
+      CoordSynthesis.LatMax, CoordSynthesis.LonMax).roundedTo(13), 13)
+    (0L until 50000L).foreach { id =>
+      val (lat, lon) = CoordSynthesis.latLonOf(id)
+      corpus.addPoint(lat, lon)
+    }
+    val got = Seq(
+      "uniform" -> run(grid("uniform", 13))(_.split()),
+      "clustered res 12, trim off" -> run(grid("clustered", 12), trim = false)(_.split()),
+      "banded, trim off" -> run(grid("banded", 13), trim = false)(_.split()),
+      "banded max-nodes 500, bugCompatTrim" ->
+        run(grid("banded", 13), bugCompat = true, maxNodes = 500L)(_.split()),
+      "splitIntoTiles(3), uniform res 11" -> run(uniform11)(_.splitIntoTiles(3)),
+      "L-shape sliced" -> run(uniform12, trim = false)(_.splitPolygonSliced(lShape(uniform12))),
+      "L-shape constrained, res 11" ->
+        run(uniform11, trim = false)(_.splitConstrained(Some(lShape(uniform11)))),
+      "corpus 50k, max-nodes 2000" -> run(corpus)(_.split()))
+    val want = Seq(
+      "uniform" -> "17 tiles c4e2be01aaa654833b31f90a24a06a1c tested 325",
+      "clustered res 12, trim off" -> "18 tiles 11e560e1a51bfdc484c1c3d17f81e510 tested 12956",
+      "banded, trim off" -> "16 tiles ccf63472793adb7c013d7eb06b13b129 tested 8459",
+      "banded max-nodes 500, bugCompatTrim" ->
+        "44 tiles 779481896c4d795e101fc3d085be7c4c tested 196322",
+      "splitIntoTiles(3), uniform res 11" ->
+        "3 tiles 5ce0db0fb0f0ed88a8741a4ad6e2be75 tested 201070",
+      "L-shape sliced" -> "8 tiles c7ec33c338314004e9ea9ab738bdca60 tested 157676",
+      "L-shape constrained, res 11" -> "8 tiles 3086df15a193bf4dc92090ce67e2ab1e tested 85745",
+      "corpus 50k, max-nodes 2000" -> "40 tiles c383f9983396b62136b3f82bebcfc120 tested 2954")
+    assert(got === want, got.map { case (k, v) => s"\n  \"$k\" -> \"$v\"" }.mkString)
+  }
+
   test("tiny input produces a single tile") {
     val pts = Seq((1000, 1000), (1500, 1500), (2000, 2000))
     val tiles = solve(TestSurfaces.gridOf(pts), 100L, trim = false)

@@ -89,6 +89,16 @@ object TestSurfaces {
     g
   }
 
+  /** Concave L inside `b`: the full west half plus the south half of
+    * the east half (x = lon, y = lat, map units). */
+  def lShape(b: TileRect): java.awt.geom.Area = {
+    val midLon = b.minLon + b.width / 2
+    val midLat = b.minLat + b.height / 2
+    graft.solver.PolygonSupport.polygonOf(Seq((Seq(
+      (b.minLat, b.minLon), (b.maxLat, b.minLon), (b.maxLat, midLon),
+      (midLat, midLon), (midLat, b.maxLon), (b.minLat, b.maxLon)), true)))
+  }
+
   def all(n: Int): Map[String, Seq[(Int, Int)]] = Map(
     "uniform" -> pointsUniform(n),
     "clustered" -> pointsClustered(n),
