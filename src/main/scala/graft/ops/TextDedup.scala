@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /**
  * Deduplication operators for large text corpora: exact, MinHash+LSH,
@@ -304,11 +305,13 @@ object TextDedup {
    * (r7) Hybrid tail: once the (shrinking) edge list fits
    * `driverFinishEdges` (default 1M edges; set 0 to force
    * pure-distributed), a single union-find pass finishes the
-   * contraction on the driver. Size the driver heap for more than the
-   * packed edge arrays (16 bytes an edge): [[unionFindLabels]] also
-   * builds a boxed `HashMap[Long, Long]` over every node, a buffer of
-   * boxed `(id, 0L)` tuples (two per edge) and the `.distinct` copy of
-   * its ids. The tail rounds of
+   * contraction on the driver: [[unionFindLabels]] on primitive
+   * arrays, the edges packed by the same one scan that decides the path
+   * ([[DriverGraph.collectEdges]]). Driver heap, measured in a local[4]
+   * JVM (tasks share its heap) on 1 M edges over 2 M ids: the live heap
+   * after GC peaked 495 bytes an edge over idle (1,092 with the boxed
+   * `HashMap[Long, Long]` it replaced), and the call took 1.8 s (6.4 s
+   * before). The tail rounds of
    * star-contraction are pure latency — a few KB of edges dragged
    * through full shuffle DAGs once the big components have collapsed
    * (measured: round 0 took 368k -> 1.7k edges, then three more
@@ -333,11 +336,15 @@ object TextDedup {
     // exchange, no labels-distinct, no selfOnly anti-join (union-find
     // handles duplicates, either orientation, and self-pairs — a
     // self-pair node becomes its own singleton root, exactly the
-    // selfOnly contract). One count job on the materialized pairs
-    // decides; the distributed contraction below remains the >bound
-    // path and its pure-distributed fixpoint stays spec-pinned.
-    if (p0.count() <= driverFinishEdges)
-      return unionFindLabels(p0.toDF("u", "v"))
+    // selfOnly contract). One packing job, which also materializes the
+    // pairs it reaches (all of them unless it stops at the bound),
+    // decides and brings the edges along; the distributed
+    // contraction below remains the >bound (or null id) path and its
+    // pure-distributed fixpoint stays spec-pinned.
+    DriverGraph.collectEdges(p0, "id_a", "id_b", driverFinishEdges) match {
+      case Some((us, vs)) => return unionFindLabels(p0.sparkSession, us, vs)
+      case None =>
+    }
     var edges = p0
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
@@ -379,13 +386,17 @@ object TextDedup {
       edgeCount = nextCount
       round += 1
     }
-    val labels =
+    val finish =
       if (!converged && edgeCount <= driverFinishEdges)
-        unionFindLabels(edges)
-      else
+        DriverGraph.collectEdges(edges, "u", "v", driverFinishEdges)
+      else None
+    val labels = finish match {
+      case Some((us, vs)) => unionFindLabels(edges.sparkSession, us, vs)
+      case None =>
         edges.select(col("u").as("id"), col("v").as("label"))
           .unionByName(edges.select(col("v").as("id"), col("v").as("label")))
           .distinct()
+    }
     // ids whose only pairs were self-pairs are filtered out of the
     // edge list up front but are still "appearing in a pair": emit
     // them as their own singleton component, exactly like
@@ -397,56 +408,33 @@ object TextDedup {
     labels.unionByName(selfOnly)
   }
 
-  /** Driver union-find over a BOUNDED edge list (caller guarantees
-    * the row count): collects (u, v) packed into primitive arrays per
-    * partition (no boxed Row per edge), unions with path compression,
-    * and emits (id, min-of-component) for every node — exactly the
-    * converged star labels. The result is parallelized back out so
-    * downstream plans stay distributed. */
-  private def unionFindLabels(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val packed = edges.select(col("u"), col("v")).as[(Long, Long)]
-      .mapPartitions { it =>
-        val us = Array.newBuilder[Long]
-        val vs = Array.newBuilder[Long]
-        it.foreach { case (u, v) => us += u; vs += v }
-        Iterator.single((us.result(), vs.result()))
-      }.collect()
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x: Long): Long = {
+  /** Driver union-find over packed edges: the ids compact to dense
+    * ints ([[DriverGraph.dense]]), an `int[]` union-find by minimum id
+    * (dense ids order like the ids, so the minimum dense root is the
+    * component minimum) labels them, and (id, min-of-component) comes
+    * back for every node as a local DataFrame — exactly the converged
+    * star labels. */
+  private def unionFindLabels(spark: SparkSession, us: Array[Long],
+                              vs: Array[Long]): DataFrame = {
+    val g = DriverGraph.dense(us, vs)
+    val parent = Array.range(0, g.ids.length)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-      var c = x
-      while (parent.getOrDefault(c, c) != r) {
-        val nxt = parent.getOrDefault(c, c); parent.put(c, r); c = nxt
-      }
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    packed.foreach { case (us, vs) =>
-      var i = 0
-      while (i < us.length) {
-        val ru = find(us(i)); val rv = find(vs(i))
-        // union by MIN root so the representative is the component min
-        if (ru != rv) {
-          if (ru < rv) parent.put(rv, ru) else parent.put(ru, rv)
-        }
-        // make sure both nodes are known even when already unified
-        parent.putIfAbsent(us(i), find(us(i)))
-        parent.putIfAbsent(vs(i), find(vs(i)))
-        i += 1
-      }
+    var i = 0
+    while (i < g.src.length) {
+      val ru = find(g.src(i))
+      val rv = find(g.dst(i))
+      if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
+      i += 1
     }
-    val nodes = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    packed.foreach { case (us, vs) =>
-      var i = 0
-      while (i < us.length) { nodes += ((us(i), 0L)); nodes += ((vs(i), 0L)); i += 1 }
-    }
-    val out = nodes.map(_._1).distinct.map(id => (id, find(id)))
-    val slices = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, out.size / 10000 + 1))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq, slices)).toDF("id", "label")
+    val labels = new Array[Long](g.ids.length)
+    i = 0
+    while (i < labels.length) { labels(i) = g.ids(find(i)); i += 1 }
+    DriverGraph.pairFrame(spark, g.ids, labels, labels.length, ("id", "label"),
+      (LongType, LongType))
   }
 
   /** Distinct character n-gram shingles: (id, gram). */

@@ -6,14 +6,15 @@ import java.util.zip.GZIPOutputStream
 import graft.formats._
 import graft.geo.MapUnits
 import graft.sources.SerializableHadoopConf
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
  * Per-tile OSM file writers (sinks K1-K3 of SURVEY.md §2): the `dist`
  * phase's assigned entities land as one `%08d.o5m` / `%08d.osm.gz` /
- * `%08d.pbf` per tile, exactly the reference's output surface
+ * `%08d.osm.pbf` per tile (the names template.args lists), exactly the reference's output surface
  * (writer/O5mMapWriter.java initForWrite filename :171, OSMXMLWriter
  * :50, BinaryMapWriter; dispatch in OSMWriter). The per-file byte
  * formats are the byte-parity codecs of [[graft.formats]]
@@ -41,10 +42,20 @@ object OsmTileSink {
   def extensionOf(format: String): String = format match {
     case "o5m" => "o5m"
     case "xml" => "osm.gz"
-    case "pbf" => "pbf"
+    case "pbf" => "osm.pbf"
     case other => throw new IllegalArgumentException(
       s"unsupported tile output format: $other (o5m | xml | pbf)")
   }
+
+  /** The filesystem tiles are written through. A checksummed one (the
+    * local filesystem) would leave a `.<tile>.crc` beside every tile,
+    * so its raw filesystem writes them; the cached instance that the
+    * parquet sinks share is left as it is. */
+  private def tileFs(outDir: String, conf: Configuration): FileSystem =
+    new Path(outDir).getFileSystem(conf) match {
+      case checksummed: ChecksumFileSystem => checksummed.getRawFileSystem
+      case fs => fs
+    }
 
   /** o5m/pbf bbox values: (long)(Utils.toDegrees(mu) * 1e7), the
     * reference writers' truncation (O5mMapWriter.writeBBox). */
@@ -136,7 +147,8 @@ object OsmTileSink {
       .sortWithinPartitions(col("map_id"), kindRank, col("id"))
 
     // overwrite semantics of a re-run land here, on the driver, BEFORE
-    // any attempt exists — tasks themselves never delete a tile
+    // any attempt exists — tasks themselves never delete a tile; the
+    // checksummed filesystem also drops a `.crc` an older run left
     locally {
       val fs = new Path(outDir).getFileSystem(conf.value)
       areas.foreach { a =>
@@ -146,7 +158,7 @@ object OsmTileSink {
     }
 
     rows.foreachPartition { (it: Iterator[Row]) =>
-      val fs = new Path(outDir).getFileSystem(conf.value)
+      val fs = tileFs(outDir, conf.value)
       val attempt = Option(org.apache.spark.TaskContext.get())
         .map(_.taskAttemptId()).getOrElse(0L)
       val temps = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
@@ -197,7 +209,7 @@ object OsmTileSink {
     // every area has a file, even if empty); temp + rename so a driver
     // crash can't leave a truncated file, create-if-absent so a late
     // full-file commit is never replaced
-    val fs = new Path(outDir).getFileSystem(conf.value)
+    val fs = tileFs(outDir, conf.value)
     areas.foreach { a =>
       val f = new Path(outDir, f"${a.mapId}%08d.$ext")
       if (!fs.exists(f)) {

@@ -435,7 +435,6 @@ class MainSpec extends AnyFunSuite {
       ran(Seq(s"--output-dir=$osm/$out", "--max-nodes=300", "--output=o5m") ++ extra :+
         s"$osm/in.o5m": _*)
       val tiles = Option(new java.io.File(s"$osm/$out/tiles").listFiles()).toSeq.flatten
-        .filterNot(_.getName.startsWith(".")) // checksum side files
         .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
       val metrics = scala.io.Source.fromFile(s"$osm/$out/metrics.jsonl")
       val written = try metrics.getLines().filter(_.contains("rows_written")).mkString

@@ -341,6 +341,24 @@ class OsmPipelineSpec extends AnyFunSuite {
       Set("/p/a \"b\".o5m", "/p/c.pbf"))
   }
 
+  test("tiles/ holds exactly the files template.args names, in every format") {
+    val dir = tmpDir()
+    writeFile(s"$dir/in.pbf", corpus(1500))
+    Seq("o5m", "xml", "pbf").foreach { fmt =>
+      val out = s"$dir/out_$fmt"
+      val Right(args) = SplitterArgs.parse(Seq(
+        "--output-dir=" + out, "--max-nodes=800", s"--output=$fmt", s"$dir/in.pbf"))
+      assert(Main.run(spark, args) === "dist")
+      val src = scala.io.Source.fromFile(s"$out/template.args")
+      val named = try src.getLines().collect {
+        case l if l.startsWith("input-file: ") => l.stripPrefix("input-file: ")
+      }.toSet finally src.close()
+      val listed = new java.io.File(s"$out/tiles").listFiles().map(_.getName).toSet
+      assert(named.size > 1)
+      assert(listed === named, s"$fmt tiles")
+    }
+  }
+
   test("xml and pbf tile sinks produce parseable, equivalent tiles") {
     val es = corpus(1500)
     val dir = tmpDir()
